@@ -10,10 +10,11 @@ Reference behavior reproduced (see SURVEY.md §1.3):
 - records carry @rid / @class / @version metadata
   (core:id/ORecordId.java, core:record/ORecordAbstract.java)
 
-Spark mapping: a class is a DataFrame supplier (parquet path or in-memory),
-inheritance resolves to ``unionByName(allowMissingColumns=True)`` over the
-subclass DataFrames, and the metadata pseudo-columns are materialized as real
-columns on demand so Catalyst can prune/push down on them.
+Spark mapping: a class is one DataFrame (read once at registration, swapped
+whole by copy-on-write DML), inheritance resolves to
+``unionByName(allowMissingColumns=True)`` over the subclass DataFrames, and
+the metadata pseudo-columns are materialized as real columns on demand so
+Catalyst can prune/push down on them.
 
 LINK properties (core:metadata/schema/OProperty.java linkedClass) are
 generalized to value-based foreign keys: a link spec says "this column's
@@ -26,7 +27,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from orientdb_spark.errors import OSchemaException
 from orientdb_spark.otypes import OType
@@ -80,8 +81,8 @@ class OClass:
     cluster_id: int
     properties: dict[str, OProperty] = field(default_factory=dict)
     super_class: str | None = None
-    # Lazy DataFrame supplier; swapped on DML rewrite (copy-on-write).
-    df_supplier: Callable[[], DataFrame] | None = None
+    # The class's table; swapped whole on DML rewrite (copy-on-write).
+    df: DataFrame | None = None
     # Optional expression producing a stable long position for @rid.pos.
     rid_pos: Callable[[DataFrame], "F.Column"] | None = None
     # copy-on-write swap count (drives periodic lineage checkpoints)
@@ -99,8 +100,7 @@ class Catalog:
     reference (class names matched ignoring case in
     core:metadata/schema/OSchema.java getClass)."""
 
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
+    def __init__(self):
         self._classes: dict[str, OClass] = {}  # lower-name -> OClass
         self._next_cluster = 1
 
@@ -110,18 +110,16 @@ class Catalog:
         self,
         name: str,
         df: DataFrame | None = None,
-        path: str | None = None,
         super_class: str | None = None,
         links: dict[str, tuple[str, str]] | None = None,
         properties: list[OProperty] | None = None,
         rid_pos: Callable[[DataFrame], "F.Column"] | None = None,
         cluster_id: int | None = None,
-        transform: Callable[[DataFrame], DataFrame] | None = None,
     ) -> OClass:
         existing = self._classes.get(name.lower())
-        if existing is not None and df is None and path is None:
+        if existing is not None and df is None:
             # Re-registration with no new storage must never destroy the
-            # existing class's data supplier/properties (the reference's
+            # existing class's data/properties (the reference's
             # OSchema.createClass raises on an existing class — the DML
             # CREATE CLASS path enforces that; API-level re-registration
             # merges schema additions into the live class).
@@ -140,23 +138,11 @@ class Catalog:
             cluster_id = self._next_cluster
         self._next_cluster = max(self._next_cluster, cluster_id + 1)
 
-        supplier: Callable[[], DataFrame] | None = None
-        if path is not None:
-            spark = self.spark
-            if transform is not None:
-                supplier = lambda p=path, t=transform: t(spark.read.parquet(p))  # noqa: E731
-            else:
-                supplier = lambda p=path: spark.read.parquet(p)  # noqa: E731
-        elif df is not None:
-            if transform is not None:
-                df = transform(df)
-            supplier = lambda d=df: d  # noqa: E731
-
         cls = OClass(
             name=name,
             cluster_id=cluster_id,
             super_class=super_class,
-            df_supplier=supplier,
+            df=df,
             rid_pos=rid_pos,
         )
         for prop in properties or []:
@@ -177,7 +163,7 @@ class Catalog:
         cls.rewrites += 1
         if cls.rewrites % DML_CHECKPOINT_EVERY == 0:
             df = df.localCheckpoint(eager=True)
-        cls.df_supplier = lambda: df
+        cls.df = df
 
     def drop_class(self, name: str) -> None:
         self._classes.pop(name.lower(), None)
@@ -244,9 +230,9 @@ class Catalog:
         classes = self.subclasses(name) if polymorphic else [self.get(name)]
         parts: list[DataFrame] = []
         for cls in classes:
-            if cls.df_supplier is None:
+            df = cls.df
+            if df is None:
                 continue
-            df = cls.df_supplier()
             if with_meta:
                 df = self._with_meta(df, cls, keep_backing=internal)
             elif not internal:

@@ -160,10 +160,8 @@ def execute_dml(engine, cmd) -> DataFrame:
     if isinstance(cmd, A.RemovePropertyCmd):
         cls = engine.catalog.get(cmd.class_name)
         cls.properties.pop(cmd.prop_name, None)
-        if cls.df_supplier is not None:
-            df = cls.df_supplier()
-            if cmd.prop_name in df.columns:
-                engine.catalog.set_dataframe(cmd.class_name, df.drop(cmd.prop_name))
+        if cls.df is not None and cmd.prop_name in cls.df.columns:
+            engine.catalog.set_dataframe(cmd.class_name, cls.df.drop(cmd.prop_name))
         return _result(engine, dropped=cmd.prop_name)
     if isinstance(cmd, A.CreateIndexCmd):
         # engine-side index bookkeeping: Catalyst pushdown/pruning replaces
@@ -173,11 +171,11 @@ def execute_dml(engine, cmd) -> DataFrame:
         prev_index_type = p.index_type
         p.index_type = cmd.index_type
         cls.properties[cmd.prop_name] = p
-        if cmd.index_type == "unique" and cls.df_supplier is not None:
+        if cmd.index_type == "unique" and cls.df is not None:
             # building a unique index over existing duplicate keys fails,
             # like the reference's index build
             try:
-                _check_unique(engine, cmd.class_name, cls.df_supplier(), {cmd.prop_name})
+                _check_unique(engine, cmd.class_name, cls.df, {cmd.prop_name})
             except Exception:
                 p.index_type = prev_index_type
                 raise
@@ -196,8 +194,8 @@ def execute_dml(engine, cmd) -> DataFrame:
         return _create_link(engine, cmd)
     if isinstance(cmd, A.TruncateCmd):
         cls = engine.catalog.get(cmd.class_name)
-        if cls.df_supplier is not None:
-            engine.catalog.set_dataframe(cmd.class_name, cls.df_supplier().limit(0))
+        if cls.df is not None:
+            engine.catalog.set_dataframe(cmd.class_name, cls.df.limit(0))
         return _result(engine, truncated=cmd.class_name)
     if isinstance(cmd, A.GrantCmd):
         # GRANT/REVOKE mutate the role's CRUD bitmask (ORole.java); the
@@ -261,28 +259,27 @@ def _insert(engine, cmd: A.InsertCmd) -> DataFrame:
     cls = catalog.get(cmd.class_name) if catalog.has(cmd.class_name) else None
     if cls is None:
         cls = catalog.register_class(cmd.class_name)
-    if cls.df_supplier is not None:
-        existing = cls.df_supplier()
+    # the RID position this row takes; cls.next_rid advances only once
+    # validation and the unique probe pass, so a rejected INSERT burns none
+    rid = None
+    if cls.df is not None:
+        existing = cls.df
         # stable RID allocation (persistent counter): classes without a
         # declared key get a hidden __rid_pos column so @rid survives
         # copy-on-write rewrites (monotonically_increasing_id would not)
         from orientdb_spark.catalog import RID_POS_COL
 
         if cls.rid_pos is None:
+            rid = cls.next_rid
             if RID_POS_COL not in existing.columns:
                 # freeze positions for pre-existing rows once
                 existing = existing.withColumn(
                     RID_POS_COL, F.monotonically_increasing_id()
                 ).localCheckpoint(eager=True)
-                cls.next_rid = (
-                    existing.agg(F.max(RID_POS_COL)).first()[0] or 0
-                ) + 1
-            elif cls.next_rid == 0:
-                cls.next_rid = (
-                    existing.agg(F.max(RID_POS_COL)).first()[0] or 0
-                ) + 1
-            values[RID_POS_COL] = cls.next_rid
-            cls.next_rid += 1
+                rid = 0
+            if rid == 0:
+                rid = (existing.agg(F.max(RID_POS_COL)).first()[0] or 0) + 1
+            values[RID_POS_COL] = rid
         known = {f.name: f.dataType for f in existing.schema.fields}
         declared = {p.lower() for p in cls.properties}
         if cls.properties:
@@ -326,10 +323,12 @@ def _insert(engine, cmd: A.InsertCmd) -> DataFrame:
                     k: (None if v is None else str(v)) for k, v in overflow.items()
                 }
         if cls.rid_pos is None:
-            values[RID_POS_COL] = cls.next_rid
-            cls.next_rid += 1
+            rid = cls.next_rid
+            values[RID_POS_COL] = rid
         new = engine.spark.createDataFrame([values])
         _validate(engine, cmd.class_name, new)
+    if rid is not None:
+        cls.next_rid = rid + 1
     catalog.set_dataframe(cmd.class_name, new)
     return _result(engine, inserted=1)
 
@@ -368,11 +367,7 @@ def bulk_append(engine, class_name: str, df: DataFrame) -> DataFrame:
         # atomicity, the tx-layer convention)
         catalog = engine.catalog
         cls = catalog.get(class_name) if catalog.has(class_name) else None
-        existing = (
-            cls.df_supplier()
-            if cls is not None and cls.df_supplier is not None
-            else None
-        )
+        existing = cls.df if cls is not None else None
         new_rows = df
         if cls is not None and cls.properties:
             # same overflow rule as per-row _insert: undeclared AND not
@@ -600,18 +595,16 @@ def _create_property(engine, cmd: A.CreatePropertyCmd) -> DataFrame:
         prop.linked_class = cmd.linked
         prop.linked_key = "@rid"
     cls.properties[cmd.prop_name] = prop
-    if cls.df_supplier is not None:
+    if cls.df is not None and cmd.prop_name not in cls.df.columns:
         from orientdb_spark.otypes import spark_type
 
-        df = cls.df_supplier()
-        if cmd.prop_name not in df.columns:
-            try:
-                st = spark_type(otype)
-                engine.catalog.set_dataframe(
-                    cmd.class_name, df.withColumn(cmd.prop_name, F.lit(None).cast(st))
-                )
-            except ValueError:
-                pass
+        try:
+            st = spark_type(otype)
+            engine.catalog.set_dataframe(
+                cmd.class_name, cls.df.withColumn(cmd.prop_name, F.lit(None).cast(st))
+            )
+        except ValueError:
+            pass
     return _result(engine, property=f"{cmd.class_name}.{cmd.prop_name}")
 
 

@@ -13,6 +13,7 @@ mirroring the reference's compiledFilter caching
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -77,7 +78,7 @@ class Engine:
         # get_spark also sets this; _coerce additionally uses try_cast so the
         # wildcard-expansion comparisons are config-proof either way).
         spark.conf.set("spark.sql.ansi.enabled", "false")
-        self.catalog = Catalog(spark)
+        self.catalog = Catalog()
         self.functions = FunctionRegistry()
         self._select = SelectCompiler(self)
         self._plan_cache: dict[str, DataFrame] = {}
@@ -106,16 +107,23 @@ class Engine:
         self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from orientdb_spark.streaming import fix_event_nanos as fix_nanos
 
-        for name in TESTDATA_TABLES:
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            if os.path.exists(path):
+        paths = {
+            name: path
+            for name in TESTDATA_TABLES
+            if os.path.exists(path := os.path.join(sf_dir, f"{name}.parquet"))
+        }
+        # each class is read once, here; every read runs one schema-inference
+        # job, so a few overlap instead of queueing one by one
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            dfs = pool.map(lambda p: self.spark.read.parquet(p), paths.values())
+            for name, df in zip(paths, dfs):
                 self.catalog.register_class(
                     name,
-                    path=path,
+                    df=fix_nanos(df) if name == "events" else df,
                     links=_TESTDATA_LINKS.get(name),
                     rid_pos=_TESTDATA_RID_POS.get(name),
-                    transform=fix_nanos if name == "events" else None,
                 )
+        self._plan_cache.clear()  # re-registered classes invalidate cached plans
 
     def register_dataframe(self, name: str, df: DataFrame, **kw) -> None:
         self.catalog.register_class(name, df=df, **kw)

@@ -30,14 +30,6 @@ _CHECKPOINT_EVERY = 5
 # job waves; the first probe materializes the whole warmup pipeline in
 # one job.
 _CC_WARMUP = 3
-# cache large-star output per alternation (see _large_star) — module
-# flag so the checkpoint-cadence A/B (BENCH.md r8) stays re-runnable.
-# Default OFF after measurement: one checkpoint per alternation
-# (small-star) keeps lineage flat, and skipping the intermediate cache
-# lets small-star's windows consume large-star's exchange in one
-# pipelined stage — interleaved A/B min-of-4: sf0.1 4.74 s vs 4.99 s,
-# sf1 7.2 s vs 7.96 s (~5-10% off the round time).
-_CHECKPOINT_LARGE_STAR = False
 
 
 class Graph:
@@ -146,7 +138,10 @@ class Graph:
 
         Both return identical labels (min vid per component — string min,
         matching the SQL oracle's semantics). ``self.last_cc_iterations``
-        records the rounds the call took."""
+        records the rounds the call took. ``max_iter`` must be >= 1: with no
+        round run, vertices seen only as ``dst`` would keep their own id."""
+        if max_iter < 1:
+            raise ValueError(f"max_iter must be >= 1, got {max_iter}")
         if method == "two_phase":
             return self._cc_two_phase(max_iter)
         return self._cc_label_prop(max_iter)
@@ -228,20 +223,13 @@ class Graph:
 
         nbrs = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         nb = nbrs.withColumn("__mn", F.min("v").over(Window.partitionBy("u")))
-        out = (
+        return (
             nb.filter(F.col("v") > F.col("u"))
             .select(
                 F.col("v").alias("u"), F.least(F.col("__mn"), F.col("u")).alias("v")
             )
             .filter(F.col("u") != F.col("v"))
         )
-        if _CHECKPOINT_LARGE_STAR:
-            # optional lazy cache of the intermediate star — measured
-            # SLOWER than letting small-star pipeline straight over this
-            # exchange (r8 cadence A/B, see the module flag); small-star's
-            # own per-alternation checkpoint already keeps lineage flat
-            out = out.localCheckpoint(eager=False)
-        return out
 
     @staticmethod
     def _small_star(e: DataFrame) -> DataFrame:

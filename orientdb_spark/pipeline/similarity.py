@@ -2109,9 +2109,16 @@ def _exact_pair_scores_dgemm(s: DataFrame, t: DataFrame) -> DataFrame:
     # same fits-in-memory class the broadcast(s) relation had. The
     # exact path is the oracle-parity contract; past the gate the
     # caller should be on method="ivf", the scale path.
-    max_src = int(
-        os.environ.get("SPARK_GRAFT_BITEXT_EXACT_MAX_SRC", "100000")
-    )
+    raw = os.environ.get("SPARK_GRAFT_BITEXT_EXACT_MAX_SRC", "100000")
+    try:
+        max_src = int(raw)
+    except ValueError:
+        max_src = 0
+    if max_src < 1:
+        raise ValueError(
+            "SPARK_GRAFT_BITEXT_EXACT_MAX_SRC must be a positive integer "
+            f"(the src rows the exact path may collect), got {raw!r}"
+        )
     s_rows = s.select("src_id", "__sv", "__sn").limit(max_src + 1).collect()
     if len(s_rows) > max_src:
         raise ValueError(
@@ -2263,7 +2270,10 @@ def bitext_mine(
       the same fits-in-memory constraint the former broadcast
       crossJoin had) instead of three broadcast corpus scans. At
       100 TB the pair count is still |src|x|tgt|; use it only when one
-      side is query-sized.
+      side is query-sized. Size gate: past
+      ``SPARK_GRAFT_BITEXT_EXACT_MAX_SRC`` src rows (a positive
+      integer, default 100000) the exact path raises ValueError after
+      collecting at most one row more than the gate.
     - ``method="ivf"`` (the scale path, the CCMatrix recipe): two
       ``ivf_topk`` sweeps (src→tgt and tgt→src corpora, ``k_candidates``
       ≥ k neighbors each, default 2k) generate the candidate pair list

@@ -247,7 +247,7 @@ class SelectCompiler:
         cls = None
         for name in catalog.class_names():
             c = catalog.get(name)
-            if c.cluster_id in clusters and c.df_supplier is not None:
+            if c.cluster_id in clusters and c.df is not None:
                 cls = c
                 parts.append(catalog.dataframe(name, polymorphic=False, with_meta=True))
         if not parts:

@@ -22,6 +22,10 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "orientdb_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or min(os.cpu_count() or 4, 32)
+    # a heap cap above the host's memory lets the driver JVM grow until the
+    # kernel's OOM killer ends it: default to half the host's memory, <= 48g
+    host_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(48, max(1, host_gb // 2))}g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -36,7 +40,7 @@ def get_spark(app_name: str = "orientdb_spark", cpus: int | None = None) -> Spar
         # the same null-on-malformed-cast semantics
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

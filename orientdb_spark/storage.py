@@ -67,9 +67,9 @@ def save_database(engine, db_dir: str) -> None:
             "cluster_id": cls.cluster_id,
             "super_class": cls.super_class,
             "properties": [_prop_dict(p) for p in cls.properties.values()],
-            "has_data": cls.df_supplier is not None,
+            "has_data": cls.df is not None,
         }
-        if cls.df_supplier is not None:
+        if cls.df is not None:
             df = engine.catalog.dataframe(name, polymorphic=False, internal=True)
             if cls.rid_pos is not None and "__rid_pos" not in df.columns:
                 df = df.withColumn("__rid_pos", cls.rid_pos(df).cast("long"))

@@ -43,7 +43,7 @@ def export_database(engine, out_dir: str) -> dict[str, str]:
     manifest = {}
     for name in engine.catalog.class_names():
         cls = engine.catalog.get(name)
-        if cls.df_supplier is None:
+        if cls.df is None:
             continue
         path = os.path.join(out_dir, name)
         export_class(engine, name, path)

@@ -23,21 +23,39 @@ untouched on failure.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from orientdb_spark.errors import OConcurrentModificationException
 
 
 class Transaction:
     def __init__(self, engine):
         self.engine = engine
-        self._snapshot = {
-            name: engine.catalog.get(name).df_supplier
-            for name in engine.catalog.class_names()
-        }
-        self._touched: set[str] = set()
-        self._overlay: dict[str, object] = {}  # class -> df_supplier at tx end
+        cat = engine.catalog
+        # class name -> its table at begin / at the end of this tx's writes
+        self._snapshot = {name: cat.get(name).df for name in cat.class_names()}
+        self._overlay: dict[str, object] = {}
         self._active = True
 
     # -- buffered operations -----------------------------------------------------
+
+    @contextmanager
+    def _tx_view(self, names):
+        """Swap the tx's buffered tables for ``names`` into the catalog and
+        restore the live ones on exit. Plans cached against either view
+        are dropped on both edges."""
+        cat = self.engine.catalog
+        saved = {name: cat.get(name).df for name in names}
+        for name in names:
+            if name in self._overlay:
+                cat.get(name).df = self._overlay[name]
+        self.engine._plan_cache.clear()
+        try:
+            yield
+        finally:
+            for name, df in saved.items():
+                cat.get(name).df = df
+            self.engine._plan_cache.clear()
 
     def command(self, text: str):
         """Run DML against the transaction's view: the engine executes on a
@@ -45,46 +63,25 @@ class Transaction:
         instead of the shared catalog."""
         self._check_active()
         from orientdb_spark.parser import parse
-        from orientdb_spark import sqlast as A
 
-        cmd = parse(text)
-        target = getattr(cmd, "class_name", None)
+        target = getattr(parse(text), "class_name", None)
         if target is None:
             raise OConcurrentModificationException(
                 "Only class-targeted DML participates in a transaction"
             )
-        cat = self.engine.catalog
-        cls = cat.get(target)
-        saved = cls.df_supplier
-        # start from the tx's buffered view if this class was already touched
-        if target.lower() in {t.lower() for t in self._touched}:
-            cls.df_supplier = self._overlay[target.lower()]
-        try:
+        cls = self.engine.catalog.get(target)
+        with self._tx_view([cls.name]):
             result = self.engine.command(text)
-            self._overlay[target.lower()] = cls.df_supplier
-            self._touched.add(target)
-            return result
-        finally:
-            cls.df_supplier = saved
+            self._overlay[cls.name] = cls.df
+        return result
 
     def query(self, text: str):
         """Read inside the transaction: touched classes resolve to the
         buffered overlay (read-your-writes). Returns collected rows — a
         lazy plan would outlive the overlay scope."""
         self._check_active()
-        cat = self.engine.catalog
-        saved = {}
-        for name in self._touched:
-            cls = cat.get(name)
-            saved[name] = cls.df_supplier
-            cls.df_supplier = self._overlay[name.lower()]
-        try:
-            self.engine._plan_cache.clear()
+        with self._tx_view(list(self._overlay)):
             return self.engine.sql(text).collect()
-        finally:
-            for name, sup in saved.items():
-                cat.get(name).df_supplier = sup
-            self.engine._plan_cache.clear()
 
     # -- lifecycle ---------------------------------------------------------------
 
@@ -98,32 +95,30 @@ class Transaction:
         cat = self.engine.catalog
         installs: dict[str, object] = {}
         try:
-            for name in self._touched:
+            for name, ovl in self._overlay.items():
                 cls = cat.get(name)
-                cur_sup = cls.df_supplier
-                snap_sup = self._snapshot.get(name)
-                ovl_sup = self._overlay[name.lower()]
-                if cur_sup is snap_sup:
+                cur = cls.df
+                snap = self._snapshot.get(name)
+                if cur is snap:
                     # nothing moved underneath us: install the overlay as-is
-                    installs[name] = ovl_sup
+                    installs[name] = ovl
                     continue
-                if snap_sup is None:
+                if snap is None:
                     # class did not exist at begin (created concurrently and
                     # then touched through the tx): no snapshot to diff a
                     # write-set against, so this is a class-granular conflict
                     raise OConcurrentModificationException(
                         f"Class '{name}' was created after the transaction began"
                     )
-                merged = self._rebase(cls, name, snap_sup(), cur_sup(), ovl_sup())
-                installs[name] = lambda _df=merged: _df
+                installs[name] = self._rebase(cls, name, snap, cur, ovl)
         except BaseException:
             # any validation failure (conflict OR an unexpected analysis/
             # execution error inside the rebase) must deactivate the tx —
             # otherwise callers could retry commit on a half-validated state
             self._active = False
             raise
-        for name, sup in installs.items():
-            cat.get(name).df_supplier = sup
+        for name, df in installs.items():
+            cat.get(name).df = df
         self.engine._plan_cache.clear()
         self._active = False
 
@@ -204,7 +199,6 @@ class Transaction:
     def rollback(self) -> None:
         self._check_active()
         self._overlay.clear()
-        self._touched.clear()
         self._active = False
 
     def _check_active(self) -> None:

@@ -169,9 +169,34 @@ def test_append_rejection_is_atomic(eng, spark):
     with pytest.raises(OValidationException):
         eng.append("atv", spark.createDataFrame([(None,)], "name string"))
     # no table swap committed: the class still has no backing data
-    assert eng.catalog.get("atv").df_supplier is None
+    assert eng.catalog.get("atv").df is None
     # (an UNKNOWN class cannot be rejected at all — it has no declared
     # constraints — so register-after-checks is purely defensive there)
+
+
+def test_rejected_insert_burns_no_rid(eng):
+    """Per-row INSERT has the bulk path's atomicity: a statement rejected
+    by validation or by a unique probe leaves next_rid alone, so the next
+    accepted row takes the next contiguous @rid position."""
+    from orientdb_spark.catalog import OProperty
+    from orientdb_spark.otypes import OType
+
+    eng.command("create class rjq")
+    eng.catalog.get("rjq").properties["code"] = OProperty(
+        name="code", otype=OType.STRING, not_null=True
+    )
+    eng.command("insert into rjq (code) values ('a')")
+    with pytest.raises(OValidationException):
+        eng.command("insert into rjq (code) values (null)")
+    eng.command("insert into rjq (code) values ('c')")
+    eng.command("create index rjq.code unique")
+    with pytest.raises(OIndexException):
+        eng.command("insert into rjq (code) values ('c')")
+    eng.command("insert into rjq (code) values ('d')")
+    rows = eng.query("select code, @rid from rjq")
+    assert sorted((r["rid"]["pos"], r["code"]) for r in rows) == [
+        (0, "a"), (1, "c"), (2, "d")
+    ]
 
 
 def test_append_keeps_schemaless_era_real_columns(eng, spark):

@@ -29,6 +29,14 @@ def test_two_phase_cc_chain_converges_fast(chain):
     assert chain.last_cc_iterations <= 10
 
 
+@pytest.mark.parametrize("method", ["two_phase", "label_prop"])
+def test_cc_rejects_max_iter_below_one(chain, method):
+    """With no round run, vertices seen only as ``dst`` would silently
+    keep their own id as component: max_iter < 1 is refused up front."""
+    with pytest.raises(ValueError, match="max_iter must be >= 1, got 0"):
+        chain.connected_components(max_iter=0, method=method)
+
+
 def test_two_phase_matches_label_prop(spark):
     verts = spark.createDataFrame(
         [("a",), ("b",), ("c",), ("x",), ("y",), ("lone",)], ["vid"]

@@ -261,3 +261,43 @@ def test_numeric_projection_alias(engine):
     )
     assert list(rows[0].asDict().keys()) == ["1", "2"]
     assert rows[0]["1"].endswith("!")
+
+
+def _jobs_submitted(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_compile_on_parquet_class_runs_no_job(spark):
+    """A parquet-registered class is read once, at registration: compiling
+    a fresh SELECT over it (plan-cache miss, link navigation included)
+    submits no Spark job — no per-call schema inference."""
+    from orientdb_spark import Engine
+    from tests.conftest import SF_DIR
+
+    eng = Engine(spark)
+    eng.register_parquet_dir(SF_DIR)
+    for text in (
+        "select o_orderkey, o_totalprice from orders where o_orderkey = 7",
+        "select l_orderkey.o_orderdate as d from lineitem where l_orderkey = 1",
+    ):
+        j0 = _jobs_submitted(spark)
+        df = eng.sql(text)
+        assert _jobs_submitted(spark) == j0, text
+        df.collect()
+
+
+def test_register_parquet_dir_drops_cached_plans(spark):
+    """Re-registering the driver tables from another scale-factor dir
+    invalidates plans cached against the old tables."""
+    from orientdb_spark import Engine
+
+    eng = Engine(spark)
+    q = "select count(*) as n from orders"
+    eng.register_parquet_dir("/root/testdata/sf0.001")
+    assert eng.query(q)[0]["n"] == spark.read.parquet(
+        "/root/testdata/sf0.001/orders.parquet"
+    ).count()
+    eng.register_parquet_dir("/root/testdata/sf0.01")
+    assert eng.query(q)[0]["n"] == spark.read.parquet(
+        "/root/testdata/sf0.01/orders.parquet"
+    ).count()

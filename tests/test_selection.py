@@ -887,6 +887,16 @@ def test_bitext_exact_src_collect_is_size_gated(spark, monkeypatch):
     assert len(_mined_set(S.bitext_mine(src, tgt, k=2, threshold=1.0))) > 0
 
 
+def test_bitext_exact_gate_names_malformed_env(spark, monkeypatch):
+    """A malformed size gate fails with an error naming the variable,
+    not a bare int() parse error."""
+    src, tgt = _bitext_fixture(spark)
+    for bad in ("lots", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_BITEXT_EXACT_MAX_SRC", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_BITEXT_EXACT_MAX_SRC"):
+            S.bitext_mine(src, tgt, k=2, threshold=1.0).collect()
+
+
 # --- hard-negative mining (DPR, Karpukhin et al. 2020) -----------------------
 
 

@@ -53,6 +53,20 @@ def test_tx_rollback_leaves_state(spark):
         tx.commit()  # no longer active
 
 
+def test_tx_class_name_matches_ignoring_case(spark):
+    """Class names match ignoring case inside a transaction too: DML
+    spelled ``ACCT`` buffers into the class registered as ``acct``, and
+    commit installs it instead of taking the class for a newcomer."""
+    eng = _eng(spark)
+    tx = eng.begin()
+    tx.command("update ACCT set r_name = 'TX' where r_regionkey = 0")
+    tx.command("update acct set r_comment = 'c' where r_regionkey = 0")
+    q = "select r_name, r_comment from acct where r_regionkey = 0"
+    assert tx.query(q)[0].asDict() == {"r_name": "TX", "r_comment": "c"}
+    tx.commit()
+    assert eng.query(q)[0].asDict() == {"r_name": "TX", "r_comment": "c"}
+
+
 def _eng_rid(spark):
     """acct with a STABLE record identity (rid_pos) — enables the
     per-record commit path (reference: OTransactionOptimistic.java:22-45
@@ -142,7 +156,7 @@ def test_tx_class_created_after_begin_conflicts(spark):
     tx = eng.begin()
     eng.command("create class latecomer")
     eng.command("insert into latecomer (v) values (1)")
-    eng.command("insert into latecomer (v) values (2)")  # moves the supplier
+    eng.command("insert into latecomer (v) values (2)")  # moves the class table
     tx.command("update latecomer set v = 9 where v = 1")
     with pytest.raises(OConcurrentModificationException):
         tx.commit()

@@ -54,7 +54,7 @@ def main() -> None:
     # force the write path to a materialized table (the reference's
     # embedded storage persists each save; collapse the union lineage)
     eng.catalog.set_dataframe(
-        "Account", eng.catalog.get("Account").df_supplier().localCheckpoint(eager=True)
+        "Account", eng.catalog.get("Account").df.localCheckpoint(eager=True)
     )
     t_insert = time.time() - t0
     eng.declare_intent(None)
@@ -63,7 +63,7 @@ def main() -> None:
     t0 = time.time()
     eng.command("update Account set salary = salary + 1")
     eng.catalog.set_dataframe(
-        "Account", eng.catalog.get("Account").df_supplier().localCheckpoint(eager=True)
+        "Account", eng.catalog.get("Account").df.localCheckpoint(eager=True)
     )
     t_update = time.time() - t0
     versions = eng.query("select distinct(@version) as v from Account")
@@ -85,7 +85,7 @@ def main() -> None:
     t0 = time.time()
     inserted2 = eng.append("Account", src2).first()["inserted"]
     eng.catalog.set_dataframe(
-        "Account", eng.catalog.get("Account").df_supplier().localCheckpoint(eager=True)
+        "Account", eng.catalog.get("Account").df.localCheckpoint(eager=True)
     )
     t_indexed = time.time() - t0
     assert inserted2 == n, (inserted2, n)
