@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from orientdb_spark import sqlast as A
-from orientdb_spark.catalog import OProperty
+from orientdb_spark.catalog import BACKING_VERSION_COL, EXTRA_COL, RID_POS_COL, OProperty
 from orientdb_spark.errors import OCommandExecutionException
 from orientdb_spark.expressions import Scope, compile_condition, compile_expr
 from orientdb_spark.otypes import OType
@@ -129,11 +129,13 @@ def _check_unique(engine, class_name: str, df: DataFrame, touched: set[str] | No
 
 def _hooked(engine, op: str, class_name: str, run) -> DataFrame:
     """before/after CRUD hook envelope (core:hook/ORecordHook.java:27-33),
-    statement-level — see orientdb_spark.hooks."""
+    statement-level — see orientdb_spark.hooks. ``run`` returns the
+    statement's counts; the after-hook gets them as they are and the
+    result frame is built from them, so no Spark action runs here."""
     engine.hooks.fire(f"before_{op}", class_name)
-    result = run()
-    engine.hooks.fire(f"after_{op}", class_name, dict(result.first().asDict()))
-    return result
+    counts = run()
+    engine.hooks.fire(f"after_{op}", class_name, counts)
+    return _result(engine, **counts)
 
 
 def execute_dml(engine, cmd) -> DataFrame:
@@ -240,7 +242,26 @@ def _literal_value(engine, e: A.Expr):
     raise OCommandExecutionException("INSERT values must be literals")
 
 
-def _insert(engine, cmd: A.InsertCmd) -> DataFrame:
+def _rid_start(cls, existing: DataFrame | None) -> tuple[int, DataFrame | None]:
+    """First free RID position of a class whose RIDs the engine allocates,
+    and the table to append to. Stable allocation (persistent counter):
+    rows carry a hidden ``__rid_pos`` so @rid survives copy-on-write
+    rewrites (monotonically_increasing_id would not). A table without one
+    gets its positions frozen once (local frame only — published with the
+    caller's union); a table whose counter never advanced starts after its
+    max position."""
+    if existing is None:
+        return (cls.next_rid if cls is not None else 0), None
+    if RID_POS_COL not in existing.columns:
+        existing = existing.withColumn(
+            RID_POS_COL, F.monotonically_increasing_id()
+        ).localCheckpoint(eager=True)
+    elif cls.next_rid:
+        return cls.next_rid, existing
+    return (existing.agg(F.max(RID_POS_COL)).first()[0] or 0) + 1, existing
+
+
+def _insert(engine, cmd: A.InsertCmd) -> dict:
     """INSERT INTO cls(f,...) VALUES(...) — typed literal parsing per
     core:sql/OCommandExecutorSQLInsert.java:46-146 / OSQLHelper:112-164.
 
@@ -252,85 +273,48 @@ def _insert(engine, cmd: A.InsertCmd) -> DataFrame:
     string values (the reference's stringly per-record fields). A class
     with no declared properties stays fully schema-less: unknown columns
     widen the table (every record shares the inferred schema)."""
-    from orientdb_spark.catalog import EXTRA_COL
-
     catalog = engine.catalog
     values = {f: _literal_value(engine, v) for f, v in zip(cmd.fields, cmd.values)}
     cls = catalog.get(cmd.class_name) if catalog.has(cmd.class_name) else None
     if cls is None:
         cls = catalog.register_class(cmd.class_name)
+    existing = cls.df
+    known = {f.name: f.dataType for f in existing.schema.fields} if existing is not None else {}
+    if cls.properties:
+        # schema-mixed: undeclared, non-existing fields overflow
+        declared = {p.lower() for p in cls.properties}
+        overflow = {
+            k: v
+            for k, v in values.items()
+            if k not in known and k.lower() not in declared and k != EXTRA_COL
+        }
+        if overflow:
+            values = {k: v for k, v in values.items() if k not in overflow}
+            values[EXTRA_COL] = {
+                k: (None if v is None else str(v)) for k, v in overflow.items()
+            }
+            known.setdefault(EXTRA_COL, T.MapType(T.StringType(), T.StringType(), True))
     # the RID position this row takes; cls.next_rid advances only once
     # validation and the unique probe pass, so a rejected INSERT burns none
     rid = None
-    if cls.df is not None:
-        existing = cls.df
-        # stable RID allocation (persistent counter): classes without a
-        # declared key get a hidden __rid_pos column so @rid survives
-        # copy-on-write rewrites (monotonically_increasing_id would not)
-        from orientdb_spark.catalog import RID_POS_COL
-
-        if cls.rid_pos is None:
-            rid = cls.next_rid
-            if RID_POS_COL not in existing.columns:
-                # freeze positions for pre-existing rows once
-                existing = existing.withColumn(
-                    RID_POS_COL, F.monotonically_increasing_id()
-                ).localCheckpoint(eager=True)
-                rid = 0
-            if rid == 0:
-                rid = (existing.agg(F.max(RID_POS_COL)).first()[0] or 0) + 1
-            values[RID_POS_COL] = rid
-        known = {f.name: f.dataType for f in existing.schema.fields}
-        declared = {p.lower() for p in cls.properties}
-        if cls.properties:
-            # schema-mixed: undeclared, non-existing fields overflow
-            overflow = {
-                k: v
-                for k, v in values.items()
-                if k not in known and k.lower() not in declared and k != EXTRA_COL
-            }
-            if overflow:
-                values = {k: v for k, v in values.items() if k not in overflow}
-                values[EXTRA_COL] = {
-                    k: (None if v is None else str(v)) for k, v in overflow.items()
-                }
-                known.setdefault(
-                    EXTRA_COL, T.MapType(T.StringType(), T.StringType(), True)
-                )
-        # build the row with an explicit schema: known columns take the
-        # existing type (NULL literals stay typed — schema-less nulls can't
-        # be inferred), unknown columns infer from the python value
-        schema = T.StructType(
-            [T.StructField(k, known.get(k, _infer_type(v)), True) for k, v in values.items()]
-        )
-        row_df = engine.spark.createDataFrame([tuple(values.values())], schema)
-        _validate(engine, cmd.class_name, row_df)
-        new = existing.unionByName(row_df, allowMissingColumns=True)
+    if cls.rid_pos is None:
+        rid, existing = _rid_start(cls, existing)
+        values[RID_POS_COL] = rid
+    # build the row with an explicit schema: known columns take the
+    # existing type (NULL literals stay typed — schema-less nulls can't
+    # be inferred), unknown columns infer from the python value
+    schema = T.StructType(
+        [T.StructField(k, known.get(k, _infer_type(v)), True) for k, v in values.items()]
+    )
+    new = engine.spark.createDataFrame([tuple(values.values())], schema)
+    _validate(engine, cmd.class_name, new)
+    if existing is not None:
+        new = existing.unionByName(new, allowMissingColumns=True)
         _check_unique(engine, cmd.class_name, new, touched=set(values))
-    else:
-        from orientdb_spark.catalog import RID_POS_COL
-
-        if cls.properties:
-            declared = {p.lower() for p in cls.properties}
-            overflow = {
-                k: v
-                for k, v in values.items()
-                if k.lower() not in declared and k != EXTRA_COL
-            }
-            if overflow:
-                values = {k: v for k, v in values.items() if k not in overflow}
-                values[EXTRA_COL] = {
-                    k: (None if v is None else str(v)) for k, v in overflow.items()
-                }
-        if cls.rid_pos is None:
-            rid = cls.next_rid
-            values[RID_POS_COL] = rid
-        new = engine.spark.createDataFrame([values])
-        _validate(engine, cmd.class_name, new)
     if rid is not None:
         cls.next_rid = rid + 1
     catalog.set_dataframe(cmd.class_name, new)
-    return _result(engine, inserted=1)
+    return {"inserted": 1}
 
 
 def bulk_append(engine, class_name: str, df: DataFrame) -> DataFrame:
@@ -357,9 +341,7 @@ def bulk_append(engine, class_name: str, df: DataFrame) -> DataFrame:
     existing max with NO global window and no per-row driver work."""
     from pyspark.sql import Window
 
-    from orientdb_spark.catalog import EXTRA_COL, RID_POS_COL
-
-    def run() -> DataFrame:
+    def run() -> dict:
         # all catalog state (class registration, next_rid advance, the
         # table swap) commits only AFTER validation + unique probes — a
         # rejected 1M-row append must not burn a million RID positions
@@ -390,17 +372,7 @@ def bulk_append(engine, class_name: str, df: DataFrame) -> DataFrame:
                 ).drop(*overflow)
         rid_managed = cls is None or cls.rid_pos is None
         if rid_managed:
-            if existing is not None and RID_POS_COL not in existing.columns:
-                # freeze positions for pre-existing rows (local frame
-                # only — published with the union at commit)
-                existing = existing.withColumn(
-                    RID_POS_COL, F.monotonically_increasing_id()
-                ).localCheckpoint(eager=True)
-                start = (existing.agg(F.max(RID_POS_COL)).first()[0] or 0) + 1
-            elif existing is not None and cls.next_rid == 0:
-                start = (existing.agg(F.max(RID_POS_COL)).first()[0] or 0) + 1
-            else:
-                start = cls.next_rid if cls is not None else 0
+            start, existing = _rid_start(cls, existing)
             # freeze partition assignment so the counts pass and the
             # window pass see the same pids
             new_rows = new_rows.withColumn(
@@ -442,7 +414,7 @@ def bulk_append(engine, class_name: str, df: DataFrame) -> DataFrame:
         if rid_managed:
             cls.next_rid = acc
         catalog.set_dataframe(class_name, union)
-        return _result(engine, inserted=n)
+        return {"inserted": n}
 
     return _hooked(engine, "create", class_name, run)
 
@@ -463,7 +435,7 @@ def _where_scope(engine, class_name: str, where) -> tuple[Scope, DataFrame]:
     return scope, df
 
 
-def _update(engine, cmd: A.UpdateCmd) -> DataFrame:
+def _update(engine, cmd: A.UpdateCmd) -> dict:
     """UPDATE … SET/ADD/PUT/REMOVE [WHERE …]
     (core:sql/OCommandExecutorSQLUpdate.java:44-208)."""
     scope, df = _where_scope(engine, cmd.class_name, cmd.where)
@@ -513,8 +485,6 @@ def _update(engine, cmd: A.UpdateCmd) -> DataFrame:
     _check_unique(engine, cmd.class_name, out, touched={f for f, _ in cmd.sets})
     # bump @version on matched rows (optimistic-MVCC parity — the
     # reference increments the record version on every save)
-    from orientdb_spark.catalog import BACKING_VERSION_COL
-
     ver_base = (
         F.col(BACKING_VERSION_COL) if BACKING_VERSION_COL in out.columns else F.lit(0)
     )
@@ -538,17 +508,17 @@ def _update(engine, cmd: A.UpdateCmd) -> DataFrame:
     ]
     n = out.filter(pred).count()
     engine.catalog.set_dataframe(cmd.class_name, out.select(*base_cols, *new_cols))
-    return _result(engine, updated=n)
+    return {"updated": n}
 
 
-def _delete(engine, cmd: A.DeleteCmd) -> DataFrame:
+def _delete(engine, cmd: A.DeleteCmd) -> dict:
     """DELETE FROM cls [WHERE …] → anti-filter rewrite
     (core:sql/OCommandExecutorSQLDelete.java:34-76)."""
     scope, df = _where_scope(engine, cmd.class_name, cmd.where)
     if cmd.where is None:
         n = df.count()
         engine.catalog.set_dataframe(cmd.class_name, df.limit(0))
-        return _result(engine, deleted=n)
+        return {"deleted": n}
     pred = compile_condition(scope, cmd.where)
     df = scope.df
     n = df.filter(pred).count()
@@ -557,7 +527,7 @@ def _delete(engine, cmd: A.DeleteCmd) -> DataFrame:
     ).columns
     kept = df.filter(~F.coalesce(pred, F.lit(False))).select(*base_cols)
     engine.catalog.set_dataframe(cmd.class_name, kept)
-    return _result(engine, deleted=n)
+    return {"deleted": n}
 
 
 _TYPE_NAMES = {

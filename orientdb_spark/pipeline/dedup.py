@@ -738,8 +738,7 @@ def embedding_duplicate_pairs(
     regimes win or tie" bar): the DEFAULT STAYS 16 — isotropic corpora
     pay the guard's ~5% rather than tying — and "auto" remains the
     documented opt-in for clustered corpora, which real embedding
-    models produce. Study: tools/study_autocells.py; numbers in
-    BENCH.md §r10.
+    models produce. The study's numbers are in BENCH.md §r10.
 
     ``index``: a prebuilt ``similarity.IvfIndex`` over the SAME corpus
     (build-once, serve both ANN queries and near-dup mining — one

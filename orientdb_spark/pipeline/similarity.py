@@ -384,7 +384,11 @@ class IvfIndex:
         persistent-RDD set, which attributes any RDD persisted during
         the window to this call — run from a single-threaded driver (the
         engine's model); a concurrent persist from another thread would
-        be swept by ``unpersist()``."""
+        be swept by ``unpersist()``.
+
+        Rows with a NULL id are not indexed: they can never be named as a
+        neighbor, so they neither train the centers nor enter the cells."""
+        df = df.filter(F.col(id_col).isNotNull())
         if n_cells is None:
             n_cells, _ = derive_ivf_params(max(1, df.count()), target_recall)
         # r14: apply the quantizer DIRECTLY on the cell frame instead of

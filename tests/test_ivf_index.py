@@ -500,3 +500,23 @@ def test_ivf_cell_stats_matches_assignments(spark):
         for r in similarity.ivf_cell_stats(embs, n_cells=8, refine_iters=1).collect()
     }
     assert got == dict(want)
+
+
+def test_build_skips_null_id_rows(spark):
+    """A corpus row with a NULL id is not indexed: the cells, which
+    embedding_duplicate_pairs reads as its assignments, hold no NULL
+    neighbor_id, and topk answers as if the row were absent."""
+    embs = (
+        spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        .select("vec_id", "embedding")
+        .filter(F.col("vec_id") < 200)
+    )
+    q = embs.filter(F.col("vec_id") < 3)
+    stray = embs.filter(F.col("vec_id") == 0).withColumn("vec_id", F.lit(None).cast("long"))
+    build = dict(n_cells=4, refine_iters=0, persist=False)
+    idx = similarity.IvfIndex.build(embs.unionByName(stray), **build)
+    clean = similarity.IvfIndex.build(embs, **build)
+    assert idx.corpus_cells.filter(F.col("neighbor_id").isNull()).count() == 0
+    assert sorted(map(tuple, idx.topk(q, k=3, nprobe=4).collect())) == sorted(
+        map(tuple, clean.topk(q, k=3, nprobe=4).collect())
+    )
