@@ -20,6 +20,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from orientdb_spark.session import local_frame
+
 # --- engine plumbing ---------------------------------------------------------
 
 _ENGINES: dict = {}
@@ -346,7 +348,7 @@ def _graph_out_degree(spark, sf_dir):
 
 def _graph_bfs_levels(spark, sf_dir):
     g = _graph(spark, sf_dir)
-    start = spark.createDataFrame([("region:0",)], ["vid"])
+    start = local_frame(spark, [("region:0",)], "vid string")
     return (
         g.bfs(start, 3)
         .groupBy("depth")
@@ -2829,9 +2831,10 @@ def _text_bpe_merges(spark, sf_dir):
     from orientdb_spark.pipeline.text import bpe_train
 
     merges, _ = bpe_train(_docs(spark, sf_dir), n_merges=10)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, a, b) for i, (a, b) in enumerate(merges)],
-        ["rank", "left", "right"],
+        "rank bigint, left string, right string",
     )
 
 
@@ -2906,6 +2909,7 @@ _BM25_QUERIES = [
     (4, "slow query batch"),
     (5, "data stream value table"),
 ]
+_BM25_QUERY_SCHEMA = "query_id bigint, query_text string"
 
 
 def _text_bm25_topk(spark, sf_dir):
@@ -2917,7 +2921,7 @@ def _text_bm25_topk(spark, sf_dir):
     rank with doc-id tiebreaks (the tfidf/lm_score convention)."""
     from orientdb_spark.pipeline.text import bm25_topk
 
-    queries = spark.createDataFrame(_BM25_QUERIES, ["query_id", "query_text"])
+    queries = local_frame(spark, _BM25_QUERIES, _BM25_QUERY_SCHEMA)
     return bm25_topk(_docs(spark, sf_dir), queries, k=10)
 
 
@@ -2931,7 +2935,7 @@ def _text_rocchio_prf(spark, sf_dir):
     pick end-to-end."""
     from orientdb_spark.pipeline.text import rocchio_prf_topk
 
-    queries = spark.createDataFrame(_BM25_QUERIES, ["query_id", "query_text"])
+    queries = local_frame(spark, _BM25_QUERIES, _BM25_QUERY_SCHEMA)
     return rocchio_prf_topk(
         _docs(spark, sf_dir), queries, k=10, fb_docs=3, fb_terms=2
     )
@@ -3606,7 +3610,7 @@ def _security_grant_effect(spark, sf_dir):
     )
     eng.command("revoke read on database.class.region from auditor")
     attempt("read_after_revoke", lambda: eng.sql("select r_name from region"))
-    return spark.createDataFrame(probes, "probe string, outcome string")
+    return local_frame(spark, probes, "probe string, outcome string")
 
 
 def _dictionary_named_roots(spark, sf_dir):
@@ -3641,7 +3645,7 @@ def _async_query_abort_effect(spark, sf_dir):
         return len(seen) < 3
 
     eng.async_query("select o_orderkey from orders order by o_orderkey", listener)
-    return spark.createDataFrame(seen, "o_orderkey long")
+    return local_frame(spark, seen, "o_orderkey long")
 
 
 def _custom_operator_where(spark, sf_dir):
@@ -3716,7 +3720,8 @@ def _text_classifier_train(spark, sf_dir):
         iters=3,
         lr=1.0,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(k), float(v)) for k, v in sorted(w.items())],
         "bucket BIGINT, weight DOUBLE",
     )

@@ -13,10 +13,11 @@ dimension table at any scale).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from orientdb_spark.catalog import RID_COL
 from orientdb_spark.otypes import RID_TYPE
+from orientdb_spark.session import local_frame
 
 _SCHEMA = T.StructType(
     [
@@ -66,8 +67,5 @@ class Dictionary:
         return list(self._map.keys())
 
     def as_dataframe(self) -> DataFrame:
-        rows = [
-            Row(key=k, **{"class": c}, rid=Row(cluster=r[0], pos=r[1]))
-            for k, (c, r) in self._map.items()
-        ]
-        return self.engine.spark.createDataFrame(rows, schema=_SCHEMA)
+        rows = [(k, c, r) for k, (c, r) in self._map.items()]
+        return local_frame(self.engine.spark, rows, _SCHEMA)

@@ -23,11 +23,13 @@ from orientdb_spark import sqlast as A
 from orientdb_spark.catalog import BACKING_VERSION_COL, EXTRA_COL, RID_POS_COL, OProperty
 from orientdb_spark.errors import OCommandExecutionException
 from orientdb_spark.expressions import Scope, compile_condition, compile_expr
-from orientdb_spark.otypes import OType
+from orientdb_spark.otypes import OType, spark_type
+from orientdb_spark.session import local_frame
 
 
 def _result(engine, **cols) -> DataFrame:
-    return engine.spark.createDataFrame([tuple(cols.values())], list(cols.keys()))
+    schema = T.StructType([T.StructField(k, _infer_type(v), True) for k, v in cols.items()])
+    return local_frame(engine.spark, [tuple(cols.values())], schema)
 
 
 def _validate(engine, class_name: str, df: DataFrame, pred=None) -> None:
@@ -279,7 +281,9 @@ def _insert(engine, cmd: A.InsertCmd) -> dict:
     if cls is None:
         cls = catalog.register_class(cmd.class_name)
     existing = cls.df
-    known = {f.name: f.dataType for f in existing.schema.fields} if existing is not None else {}
+    known = {p.name: spark_type(p.otype) for p in cls.properties.values() if p.otype}
+    if existing is not None:
+        known |= {f.name: f.dataType for f in existing.schema.fields}
     if cls.properties:
         # schema-mixed: undeclared, non-existing fields overflow
         declared = {p.lower() for p in cls.properties}
@@ -301,12 +305,12 @@ def _insert(engine, cmd: A.InsertCmd) -> dict:
         rid, existing = _rid_start(cls, existing)
         values[RID_POS_COL] = rid
     # build the row with an explicit schema: known columns take the
-    # existing type (NULL literals stay typed — schema-less nulls can't
-    # be inferred), unknown columns infer from the python value
+    # existing or declared type (NULL literals stay typed — schema-less
+    # nulls can't be inferred), unknown columns type the python value
     schema = T.StructType(
         [T.StructField(k, known.get(k, _infer_type(v)), True) for k, v in values.items()]
     )
-    new = engine.spark.createDataFrame([tuple(values.values())], schema)
+    new = local_frame(engine.spark, [tuple(values.values())], schema)
     _validate(engine, cmd.class_name, new)
     if existing is not None:
         new = existing.unionByName(new, allowMissingColumns=True)
@@ -566,8 +570,6 @@ def _create_property(engine, cmd: A.CreatePropertyCmd) -> DataFrame:
         prop.linked_key = "@rid"
     cls.properties[cmd.prop_name] = prop
     if cls.df is not None and cmd.prop_name not in cls.df.columns:
-        from orientdb_spark.otypes import spark_type
-
         try:
             st = spark_type(otype)
             engine.catalog.set_dataframe(

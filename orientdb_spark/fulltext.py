@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from orientdb_spark.catalog import RID_COL
+from orientdb_spark.session import local_frame
 
 # core:index/OPropertyIndexFullText.java:49-52 (DEF_SEPARATOR_CHARS / DEF_IGNORE_CHARS / DEF_STOP_WORDS)
 IGNORE_CHARS = " \r\n\t:;,.|+*/\\=!?[]()'\""
@@ -133,10 +134,7 @@ def phrase_search(
     words = tokenize(phrase)
     if not words:
         raise ValueError(f"phrase has no indexable tokens: {phrase!r}")
-    spark = index.sparkSession
-    slots = spark.createDataFrame(
-        list(enumerate(words)), ["__slot", "term"]
-    )
+    slots = local_frame(index.sparkSession, enumerate(words), "__slot bigint, term string")
     cand = index.join(F.broadcast(slots), "term").select(
         id_col, (F.col("pos") - F.col("__slot")).alias("__p0"), "__slot"
     )

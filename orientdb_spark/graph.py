@@ -22,7 +22,9 @@ rounds cuts the growing lineage (same discipline as traverse.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
+
+from orientdb_spark.session import local_frame
 
 _CHECKPOINT_EVERY = 5
 # CC alternations to run before the first convergence probe (see
@@ -43,8 +45,10 @@ class Graph:
     # -- CRUD (OGraphVertex.link/unlink, delete cascade) -----------------------
 
     def link(self, src, dst, label: str | None = None) -> "Graph":
+        es = self.edges.schema
+        schema = T.StructType().add("src", es["src"].dataType).add("dst", es["dst"].dataType)
         row = [(src, dst, label)]
-        new = self.edges.sparkSession.createDataFrame(row, ["src", "dst", "label"])
+        new = local_frame(self.edges.sparkSession, row, schema.add("label", T.StringType()))
         return Graph(self.vertices, self.edges.unionByName(new, allowMissingColumns=True))
 
     def unlink(self, src, dst) -> "Graph":
@@ -616,9 +620,8 @@ class Graph:
             if prev > 0 and (total - prev) / prev < converge_tol:
                 break
             prev = total
-        return self.vertices.sparkSession.createDataFrame(
-            rows, "t INT, reachable_pairs DOUBLE, avg_ball_size DOUBLE"
-        )
+        schema = "t INT, reachable_pairs DOUBLE, avg_ball_size DOUBLE"
+        return local_frame(self.vertices.sparkSession, rows, schema)
 
     def minimum_spanning_forest(
         self, weight_col: str = "w", max_iter: int = 30
@@ -1036,7 +1039,8 @@ class Graph:
             srcs = list(dict.fromkeys(sources))
         if not srcs:
             raise ValueError("no source vertices to sample")
-        src_df = spark.createDataFrame([(s,) for s in srcs], ["s"])
+        vid = T.StructType().add("s", self.vertices.schema["vid"].dataType)
+        src_df = local_frame(spark, [(s,) for s in srcs], vid)
         state = src_df.select(
             "s",
             F.col("s").alias("vid"),
@@ -1205,7 +1209,8 @@ class Graph:
         w = F.col(weight_col) if weight_col else F.lit(1.0)
         spark = self.edges.sparkSession
         real = self.edges.select("src", "dst", w.cast("double").alias("__w"))
-        srcs = spark.createDataFrame([(v,) for v in source_vids], ["vid"])
+        vid = T.StructType().add("vid", self.edges.schema["src"].dataType)
+        srcs = local_frame(spark, [(v,) for v in source_vids], vid)
         # self-loop carrier over every vertex that could ever hold a
         # distance (edge endpoints + sources) — built once, persisted
         loops = (

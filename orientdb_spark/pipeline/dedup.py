@@ -32,6 +32,7 @@ from orientdb_spark.pipeline.common import (
     token_set,
     word_ngrams,
 )
+from orientdb_spark.session import local_frame
 
 
 def exact_duplicate_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -793,7 +794,7 @@ def embedding_duplicate_pairs(
     import math as _math
 
     from orientdb_spark.pipeline.common import vec_norm
-    from orientdb_spark.pipeline.similarity import _assign_udf, seed_centers
+    from orientdb_spark.pipeline.similarity import _assign_udf, _centroid_frame, seed_centers
 
     if blocking not in ("ivf", "imi"):
         raise ValueError(f"blocking must be 'ivf' or 'imi', got {blocking!r}")
@@ -865,9 +866,7 @@ def embedding_duplicate_pairs(
         # candidate pair, so dropping them is semantics-free.
         occ_cids = [r["cid"] for r in members.select("cid").distinct().collect()]
         cent_rows = _imi_occupied_centroids(books, occ_cids, k_half)
-        centroids = spark.createDataFrame(
-            [(cid, c) for cid, c in cent_rows.items()], ["cid", "cvec"]
-        )
+        centroids = _centroid_frame(spark, cent_rows.items())
     elif index is not None:
         # reuse the index's cached cell assignments (zero build jobs) and
         # project its raw-space centroids onto the unit sphere, where the
@@ -925,9 +924,7 @@ def embedding_duplicate_pairs(
             unit.select(F.col("__id"), F.col("__u").alias("__v")), n_cells
         )
         members = unit.withColumn("cid", _assign_udf(centers)(F.col("__u"))).persist()
-        centroids = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(centers)], ["cid", "cvec"]
-        )
+        centroids = _centroid_frame(spark, enumerate(centers))
         cent_rows = dict(enumerate(centers))
     # members persisted: scanned three times (radii + both sides of the
     # pair join); without this the Arrow assignment UDF and unit-
@@ -1128,20 +1125,17 @@ def _verify_cell_pairs_grouped(
         # cap): skip the subcell hash/join machinery entirely; measured
         # ~25% of the whole query when it rode along unconditionally
         # (sf0.1 A/B: 1.98 s vs 2.52 s)
-        cp1 = spark.createDataFrame(
-            [(cid, pid, side) for cid, _, pid, side in sides],
-            ["cid", "__pid", "__side"],
+        cp1 = local_frame(
+            spark, [(c, p, s) for c, _, p, s in sides], "cid bigint, __pid bigint, __side string"
         )
         expl = members.join(F.broadcast(cp1), "cid").select(
             "__pid", "__side", F.col(block_col).alias("__blk"), "__id", "__v", "__n"
         )
     else:
-        cp_sides = spark.createDataFrame(
-            sides, ["cid", "__sub", "__pid", "__side"]
+        cp_sides = local_frame(
+            spark, sides, "cid bigint, __sub bigint, __pid bigint, __side string"
         )
-        nsub_df = spark.createDataFrame(
-            [(cid, k) for cid, k in nsub.items()], ["cid", "__nsub"]
-        )
+        nsub_df = local_frame(spark, nsub.items(), "cid bigint, __nsub bigint")
         expl = (
             members.join(F.broadcast(nsub_df), "cid", "left")
             .withColumn(

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from orientdb_spark.pipeline.common import h60
+from orientdb_spark.session import local_frame
 
 
 def _split_key(id_col, seed: int):
@@ -597,7 +598,6 @@ def dsir_importance_weights(
     }
     nt = sum(tcounts.values())
     ns = sum(scounts.values())
-    spark = source.sparkSession
     if not scounts:
         # empty / all-empty-text source: no grams, no weights
         return (
@@ -607,9 +607,10 @@ def dsir_importance_weights(
             .withColumn("weight", F.lit(0.0))
         )
     # only SOURCE-occupied buckets can ever join a source gram
-    lr = spark.createDataFrame(
+    lr = local_frame(
+        source.sparkSession,
         [(b, tcounts.get(b, 0), cs) for b, cs in scounts.items()],
-        ["__b", "__ct", "__cs"],
+        "__b bigint, __ct bigint, __cs bigint",
     ).select(
         "__b",
         (

@@ -32,7 +32,7 @@ import warnings
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from orientdb_spark.pipeline.common import (
     cosine_similarity,
@@ -40,6 +40,7 @@ from orientdb_spark.pipeline.common import (
     per_query_topk_rank,
     vec_norm,
 )
+from orientdb_spark.session import local_frame
 
 # Query-side fan-out cap for DERIVED multi-probe widths: beyond this,
 # probing more buckets of one table is worse than adding tables (the
@@ -287,6 +288,11 @@ def _ivf_centers(
     return centers
 
 
+def _centroid_frame(spark, pairs) -> DataFrame:
+    """The (cid, cvec) centroid frame over driver-side (cid, center) pairs."""
+    return local_frame(spark, pairs, "cid bigint, cvec array<double>")
+
+
 def build_ivf_index(
     df: DataFrame,
     n_cells: int = 16,
@@ -308,10 +314,7 @@ def build_ivf_index(
     corpus = df.select(
         F.col(id_col).alias("__id"), F.col(vec_col).cast("array<double>").alias("__v")
     )
-    spark = df.sparkSession
-    centroids = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centers)], ["cid", "cvec"]
-    )
+    centroids = _centroid_frame(df.sparkSession, enumerate(centers))
     assignments = corpus.withColumn("cid", _assign_udf(centers)(F.col("__v"))).select(
         F.col("__id").alias(id_col), "cid"
     )
@@ -399,10 +402,7 @@ class IvfIndex:
         # cid = argmax-cosine against the same driver-side centers over
         # the same array<double> cast.
         centers = _ivf_centers(df, n_cells, vec_col, id_col, refine_iters)
-        spark = df.sparkSession
-        centroids = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(centers)], ["cid", "cvec"]
-        )
+        centroids = _centroid_frame(df.sparkSession, enumerate(centers))
         corpus = df.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).cast("array<double>").alias("__cv"),
@@ -549,10 +549,11 @@ class IvfIndex:
         drift as the corpus grows — re-run ``build`` when the ingested
         volume stops matching the quantizer (the standard IVF re-train
         cadence); until then recall degrades gracefully, it never
-        silently breaks, because assignment stays nearest-centroid."""
+        silently breaks, because assignment stays nearest-centroid.
+        Batch rows with a NULL id are not indexed, as in ``build``."""
         rows = self.centroids.orderBy("cid").collect()
         centers = [list(r["cvec"]) for r in rows]
-        assigned = batch.select(
+        assigned = batch.filter(F.col(self.id_col).isNotNull()).select(
             F.col(self.id_col).alias("neighbor_id"),
             F.col(vec_col).cast("array<double>").alias("__cv"),
         ).withColumn("cid", _assign_udf(centers)(F.col("__cv")))
@@ -673,9 +674,9 @@ class ImiIndex:
         self.k_half = k_half
         self.dim = dim
         self._occupied = occupied
-        spark = corpus_cells.sparkSession
         self._cent = [
-            spark.createDataFrame(
+            local_frame(
+                corpus_cells.sparkSession,
                 [(i, list(c)) for i, c in enumerate(codebooks[h])],
                 f"cid{h + 1} int, __cvec{h + 1} array<double>",
             )
@@ -1458,10 +1459,7 @@ def prototypicality_scores(
         # empty or all-zero-norm corpus: no clusters exist — the
         # zero-norm branch (cid -1, NULL score) is the whole answer
         return zero.select(F.col("__id").alias(id_col), "cid", "proto_score")
-    spark = df.sparkSession
-    cents = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centers)], ["cid", "cvec"]
-    )
+    cents = _centroid_frame(df.sparkSession, enumerate(centers))
     scored = (
         nz.withColumn("cid", _assign_udf(centers)(F.col("__v")))
         .join(F.broadcast(cents), "cid")
@@ -1611,18 +1609,7 @@ def kcenter_coreset(
     # landing mid-step would be misattributed); keeps executor storage
     # at one state copy instead of k.
     sc = spark.sparkContext
-
-    def _pids() -> set:
-        return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _free(ids: set) -> None:
-        jmap = sc._jsc.getPersistentRDDs()
-        for i in ids:
-            jrdd = jmap.get(i)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-
-    base_ids = _pids()
+    base_ids = _rdd_ids(sc)
     state = nz.select("__id", "__v", F.lit(None).cast("double").alias("__d"))
     prev_ids: set = set()
     for _ in range(1, k):
@@ -1654,18 +1641,17 @@ def kcenter_coreset(
         # the collect above materialized this step's checkpoint, so the
         # previous one is dead lineage — drop its blocks at the RDD
         # layer (see the hygiene note above)
-        cur_ids = _pids()
+        cur_ids = _rdd_ids(sc)
         new_ids = cur_ids - base_ids - prev_ids
-        _free(prev_ids)
+        _free_rdd_ids(sc, prev_ids)
         prev_ids = new_ids
         if not far:
             break  # fewer usable vectors than k: return what exists
         selected.append((far[0]["__id"], list(far[0]["__v"])))
-    _free(prev_ids)
-    return spark.createDataFrame(
-        [(i, r + 1) for r, (i, _) in enumerate(selected)],
-        [id_col, "selection_rank"],
-    )
+    _free_rdd_ids(sc, prev_ids)
+    schema = T.StructType().add(id_col, nz.schema["__id"].dataType)
+    rows = [(i, r + 1) for r, (i, _) in enumerate(selected)]
+    return local_frame(spark, rows, schema.add("selection_rank", T.LongType()))
 
 
 def _rdd_ids(sc) -> set:

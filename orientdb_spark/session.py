@@ -16,7 +16,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "orientdb_spark", cpus: int | None = None) -> SparkSession:
@@ -48,3 +51,15 @@ def get_spark(app_name: str = "orientdb_spark", cpus: int | None = None) -> Spar
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """The one constructor for driver-held ``rows`` (tuples in ``schema``
+    order; ``schema`` a StructType or DDL string — no type is inferred).
+    One Arrow table plans a LocalRelation: no Spark job, no Python worker
+    (a list of rows would plan a LogicalRDD over pickled rows)."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], schema=arrow)
+    return spark.createDataFrame(table, schema)

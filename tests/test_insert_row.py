@@ -5,7 +5,7 @@ no Spark job runs before the caller collects the result."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from orientdb_spark import Engine
 from orientdb_spark.otypes import RID_TYPE
@@ -42,3 +42,12 @@ def test_keyed_insert_runs_no_job_before_collect(spark):
     assert _jobs_submitted(spark) == j0
     assert details == [{"inserted": 1}]
     assert [r.asDict() for r in result.collect()] == [{"inserted": 1}]
+
+
+def test_first_insert_takes_declared_property_type(spark):
+    eng = Engine(spark)
+    eng.command("create class c1")
+    eng.command("create property c1.score integer")
+    eng.command("insert into c1 (score) values (10)")
+    assert eng.table("c1").schema["score"].dataType == T.IntegerType()
+    assert [r["score"] for r in eng.query("select score from c1")] == [10]

@@ -503,9 +503,10 @@ def test_ivf_cell_stats_matches_assignments(spark):
 
 
 def test_build_skips_null_id_rows(spark):
-    """A corpus row with a NULL id is not indexed: the cells, which
-    embedding_duplicate_pairs reads as its assignments, hold no NULL
-    neighbor_id, and topk answers as if the row were absent."""
+    """A corpus row with a NULL id is not indexed, by ``build`` or by
+    ``extend``: the cells, which embedding_duplicate_pairs reads as its
+    assignments, hold no NULL neighbor_id, and topk answers as if the
+    row were absent."""
     embs = (
         spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         .select("vec_id", "embedding")
@@ -520,3 +521,5 @@ def test_build_skips_null_id_rows(spark):
     assert sorted(map(tuple, idx.topk(q, k=3, nprobe=4).collect())) == sorted(
         map(tuple, clean.topk(q, k=3, nprobe=4).collect())
     )
+    grown = idx.extend(stray, persist=False)
+    assert grown.corpus_cells.filter(F.col("neighbor_id").isNull()).count() == 0

@@ -191,9 +191,11 @@ def test_duplicate_spans_two_exchanges(spark):
 def test_sssp_linear_exchange_growth(spark, monkeypatch):
     """shortest_paths' per-round shuffle budget is LINEAR: two vid
     exchanges per relaxation round (state-join alignment + message
-    min-groupBy) over the one-time self-loop-carrier distinct. The
-    self-loop carry is load-bearing — the naive union carry references
-    the state twice per round and the inlined plan doubles (2^k)."""
+    min-groupBy) over the one-time self-loop-carrier distinct. Round 1's
+    state is the sources' local frame, whose known size makes its join a
+    broadcast: no alignment exchange there. The self-loop carry is
+    load-bearing — the naive union carry references the state twice per
+    round and the inlined plan doubles (2^k)."""
     g = _graph_fixture(spark)
     monkeypatch.setattr(
         type(g.edges), "localCheckpoint", lambda self, eager=True: self
@@ -203,7 +205,7 @@ def test_sssp_linear_exchange_growth(spark, monkeypatch):
     for k in (1, 2, 3):
         plan = _formatted(g.shortest_paths(src, iterations=k))
         vid_counts.append(sum(c == "vid" for c in _exchange_keys(plan)))
-    assert vid_counts == [3, 5, 7], vid_counts
+    assert vid_counts == [2, 4, 6], vid_counts
 
 
 def test_m4_downsample_single_exchange(spark):
