@@ -18,13 +18,21 @@ formulation shuffles on the same keys Pregel would).
 Scale notes: every iteration shuffles on vid — pre-partitioning both
 frames on vid makes those shuffles co-located; localCheckpoint every few
 rounds cuts the growing lineage (same discipline as traverse.py).
+
+Release rule: a state loop (CC, PageRank, HITS, shortest paths, label
+propagation, k-core) keeps only its live state. Once a job has
+materialized the successor checkpoint and nothing live reads the state it
+replaces, ``session.release`` frees the old one, so a call leaves only
+the checkpoint its returned frame reads. The union-lineage loops (BFS,
+``betweenness_sampled``, traverse.py) keep theirs: their state unions the
+previous rounds, so no round's checkpoint is dead until the call ends.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from orientdb_spark.session import local_frame
+from orientdb_spark.session import local_frame, release
 
 _CHECKPOINT_EVERY = 5
 # CC alternations to run before the first convergence probe (see
@@ -165,6 +173,7 @@ class Graph:
         )
         self.last_cc_iterations = 0
         prev_sig = None
+        stale = []  # superseded edge sets, freed once a probe materializes e
         # Probe schedule: the signature aggregate is the only JOB each
         # alternation runs (phase checkpoints are lazy), so the first
         # _CC_WARMUP alternations run completely unprobed — real-world
@@ -180,14 +189,16 @@ class Graph:
         # witness regardless of when probing starts, and overshooting
         # cannot change the output.
         while self.last_cc_iterations < max_iter:
-            e = self._large_star(e)
-            e = self._small_star(e)
+            stale.append(e)
+            e = self._small_star(self._large_star(e))
             self.last_cc_iterations += 1
             if self.last_cc_iterations < _CC_WARMUP:
                 continue
             sig_row = e.agg(
                 F.sum(F.xxhash64("u", "v")).alias("s"), F.count(F.lit(1)).alias("n")
             ).first()
+            release(*stale)
+            stale = []
             sig = (sig_row["s"], sig_row["n"])
             if sig == prev_sig:
                 break
@@ -301,12 +312,13 @@ class Graph:
             msgs = labels.join(sym, labels["vid"] == sym["src"]).select(
                 F.col("dst").alias("vid"), F.col("component")
             )
-            labels = (
+            prev, labels = labels, (
                 msgs.unionByName(labels.select("vid", "component"))
                 .groupBy("vid")
                 .agg(F.min("component").alias("component"))
                 .localCheckpoint(eager=True)
             )
+            release(prev)
             sig = labels.agg(
                 F.sum(F.xxhash64("component")).alias("s"), F.count(F.lit(1)).alias("n")
             ).first()
@@ -879,15 +891,17 @@ class Graph:
             )
             weak = deg.filter(F.col("d") < k).select("v").localCheckpoint(eager=True)
             if weak.isEmpty():
+                release(weak)
                 return deg.select(
                     F.col("v").alias("vid"), F.col("d").alias("core_degree")
                 )
-            und = (
+            prev, und = und, (
                 und.join(weak.withColumnRenamed("v", "a"), "a", "left_anti")
                 .join(weak.withColumnRenamed("v", "b"), "b", "left_anti")
                 .select("a", "b")
                 .localCheckpoint(eager=True)
             )
+            release(prev, weak)
         raise RuntimeError(f"k-core did not converge in {max_iter} rounds")
 
     def pagerank(
@@ -957,6 +971,7 @@ class Graph:
         # teleport (message rows ride tp=0).
         zeros = vids.withColumn("contrib", F.lit(0.0)).withColumn("__tp", tp)
         ranks = vids.withColumn("rank", tp)
+        held = []  # the checkpoint the live ranks read
         for i in range(iterations):
             msgs = ranks.join(adj, ranks["vid"] == adj["src"]).select(
                 F.col("dst").alias("vid"),
@@ -977,6 +992,8 @@ class Graph:
             )
             if i % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1 or i == iterations - 1:
                 ranks = ranks.localCheckpoint(eager=True)
+                release(*held)
+                held = [ranks]
         adj.unpersist()
         vids.unpersist()
         return ranks
@@ -1133,6 +1150,8 @@ class Graph:
             .persist()
         )
         verts = self.vertices.select("vid").dropDuplicates().persist()
+        # the checkpoint each live score vector reads
+        held: dict[str, DataFrame] = {}
 
         def _norm(raw: DataFrame, out: str) -> DataFrame:
             # raw is referenced TWICE (the L1-sum agg and the divide) —
@@ -1142,6 +1161,11 @@ class Graph:
             # One eager checkpoint per half-iteration is the PageRank
             # job cadence and keeps the plan flat.
             raw = raw.localCheckpoint(eager=True)
+            # the vector this one replaces fed the other half's
+            # checkpoint, which is materialized: it is dead
+            if out in held:
+                release(held[out])
+            held[out] = raw
             tot = raw.agg(F.sum("raw").alias("__t"))
             return raw.crossJoin(F.broadcast(tot)).select(
                 "vid",
@@ -1176,6 +1200,8 @@ class Graph:
             if i % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1 or i == iterations - 1:
                 a = a.localCheckpoint(eager=True)
                 h = h.localCheckpoint(eager=True)
+                release(*held.values())
+                held.update(authority=a, hub=h)
         ed.unpersist()
         verts.unpersist()
         return h.join(a, "vid")
@@ -1226,6 +1252,7 @@ class Graph:
         )
         edges = real.unionByName(loops).persist()
         dist = srcs.withColumn("dist", F.lit(0.0)).localCheckpoint(eager=True)
+        held = [dist]  # the checkpoint the live dist reads
         for i in range(iterations):
             dist = (
                 dist.join(edges, dist["vid"] == edges["src"])
@@ -1238,6 +1265,8 @@ class Graph:
             )
             if i % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1 or i == iterations - 1:
                 dist = dist.localCheckpoint(eager=True)
+                release(*held)
+                held = [dist]
         edges.unpersist()
         return dist
 
@@ -1258,6 +1287,7 @@ class Graph:
             self.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).persist()
         labels = self.vertices.select("vid", F.col("vid").alias("label"))
+        held = []  # the checkpoint the live labels read
         for i in range(iterations):
             votes = (
                 labels.join(both, labels["vid"] == both["src"])
@@ -1283,6 +1313,8 @@ class Graph:
             )
             if i % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1 or i == iterations - 1:
                 labels = labels.localCheckpoint(eager=True)
+                release(*held)
+                held = [labels]
         both.unpersist()
         return labels
 

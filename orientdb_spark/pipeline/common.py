@@ -18,31 +18,10 @@ from pyspark.sql import Column, functions as F
 WS_RE = r"\s+"
 
 
-# "md5" (default) is the oracle-reproducible hash — DuckDB derives the
-# identical value, which is what the correctness harness compares.
-# "xxhash64" is the production 100 TB path: JVM-intrinsic, no digest
-# allocation, measured ~2x end-to-end on the fingerprinting operators
-# (hash-bound at ~400M grams; BENCH.md round-6 probe). Same 60-bit
-# shape, so every consumer works unchanged — only cross-engine oracle
-# reproducibility is lost, which production doesn't need.
-_HASH_IMPL = "md5"
-
-
-def use_fast_hash(enabled: bool = True) -> None:
-    """Flip every pipeline hash (minhash shingles, winnowing, split
-    keys, LSH buckets) between the oracle-reproducible md5 path and the
-    xxhash64 production path."""
-    global _HASH_IMPL
-    _HASH_IMPL = "xxhash64" if enabled else "md5"
-
-
 def h60(col: Column) -> Column:
-    """Deterministic 60-bit hash of a string column. Implementation is
-    process-global (see use_fast_hash); both paths return a uniform
-    non-negative long < 2^60, so downstream modular arithmetic
-    (MinHash universal hashes, split buckets) is impl-agnostic."""
-    if _HASH_IMPL == "xxhash64":
-        return F.pmod(F.xxhash64(col), F.lit(1 << 60))
+    """Deterministic 60-bit hash of a string column (the md5 form above):
+    a uniform non-negative long < 2^60 that the DuckDB oracle derives
+    identically."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 

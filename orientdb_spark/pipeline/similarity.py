@@ -40,7 +40,7 @@ from orientdb_spark.pipeline.common import (
     per_query_topk_rank,
     vec_norm,
 )
-from orientdb_spark.session import local_frame
+from orientdb_spark.session import local_frame, release
 
 # Query-side fan-out cap for DERIVED multi-probe widths: beyond this,
 # probing more buckets of one table is worse than adding tables (the
@@ -345,17 +345,11 @@ class IvfIndex:
         corpus_cells: DataFrame,
         id_col: str,
         n_cells: int | None = None,
-        block_ids: "set | None" = None,
     ):
         self.centroids = centroids
         self.corpus_cells = corpus_cells  # (neighbor_id, __cv, cid), persisted
         self.id_col = id_col
         self._n_cells = n_cells
-        # persistent-RDD ids owned by this index's localCheckpoint (if
-        # any) — DataFrame.unpersist() is a NO-OP for checkpoint blocks
-        # (they bypass the CacheManager), so unpersist() frees these at
-        # the RDD layer instead (the mmr_topk/kcenter hygiene)
-        self._block_ids: set = block_ids or set()
 
     @property
     def n_cells(self) -> int:
@@ -382,13 +376,6 @@ class IvfIndex:
         corpus (derive_ivf_params) — the scale-aware default; explicit
         values are honored verbatim.
 
-        Block hygiene caveat (applies to ``build``/``extend``): freed
-        checkpoint blocks are tracked by snapshot-diffing the JVM
-        persistent-RDD set, which attributes any RDD persisted during
-        the window to this call — run from a single-threaded driver (the
-        engine's model); a concurrent persist from another thread would
-        be swept by ``unpersist()``.
-
         Rows with a NULL id are not indexed: they can never be named as a
         neighbor, so they neither train the centers nor enter the cells."""
         df = df.filter(F.col(id_col).isNotNull())
@@ -407,13 +394,9 @@ class IvfIndex:
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).cast("array<double>").alias("__cv"),
         ).withColumn("cid", _assign_udf(centers)(F.col("__cv")))
-        block_ids: set = set()
         if persist:
-            sc = df.sparkSession.sparkContext
-            before = _rdd_ids(sc)
             corpus = corpus.localCheckpoint(eager=True)  # cut lineage; cache cells
-            block_ids = _rdd_ids(sc) - before
-        return cls(centroids, corpus, id_col, n_cells=n_cells, block_ids=block_ids)
+        return cls(centroids, corpus, id_col, n_cells=n_cells)
 
     def topk(self, queries: DataFrame, k: int = 5, nprobe: int | None = None,
              vec_col: str = "embedding", target_recall: float = 0.6) -> DataFrame:
@@ -499,14 +482,7 @@ class IvfIndex:
         )
 
     def unpersist(self) -> None:
-        # checkpoint blocks first (RDD layer — the only path that frees
-        # them); the DataFrame call covers any CacheManager-level persist
-        if self._block_ids:
-            _free_rdd_ids(
-                self.corpus_cells.sparkSession.sparkContext, self._block_ids
-            )
-            self._block_ids = set()
-        self.corpus_cells.unpersist()
+        release(self.corpus_cells)
 
     def save(self, path: str) -> None:
         """Persist the index as parquet: ``<path>/centroids`` plus the
@@ -558,19 +534,9 @@ class IvfIndex:
             F.col(vec_col).cast("array<double>").alias("__cv"),
         ).withColumn("cid", _assign_udf(centers)(F.col("__cv")))
         merged = self.corpus_cells.unionByName(assigned)
-        block_ids: set = set()
         if persist:
-            sc = batch.sparkSession.sparkContext
-            before = _rdd_ids(sc)
             merged = merged.localCheckpoint(eager=True)
-            block_ids = _rdd_ids(sc) - before
-        return IvfIndex(
-            self.centroids,
-            merged,
-            self.id_col,
-            n_cells=len(centers),
-            block_ids=block_ids,
-        )
+        return IvfIndex(self.centroids, merged, self.id_col, n_cells=len(centers))
 
 
 # Derived IMI probe widths stop here: enumerating the probe pairs costs
@@ -824,7 +790,7 @@ class ImiIndex:
         )
 
     def unpersist(self) -> None:
-        self.corpus_cells.unpersist()
+        release(self.corpus_cells)
 
 
 def imi_topk(
@@ -1551,12 +1517,8 @@ def kcenter_coreset(
     newest center (classic FPS optimization — O(k·N) total cosines,
     not O(k²·N)) followed by a 1-row argmax collect; the running
     distance column rides a localCheckpoint so step j's lineage does
-    not replay steps 1..j-1, and each step frees the previous
-    checkpoint's blocks at the RDD layer (DataFrame.unpersist is a
-    no-op for localCheckpoints — they bypass the CacheManager; pinned
-    by test_kcenter_frees_superseded_checkpoint_blocks), i.e. each
-    step drops the previous
-    checkpoint so executor block storage stays O(N), not O(k·N).
+    not replay steps 1..j-1, and each step releases the previous
+    checkpoint, so executor block storage stays O(N), not O(k·N).
     Farthest-point sampling is INHERENTLY sequential: the loop runs
     ~2·k Spark jobs (one fold + one argmax per step), so k beyond the
     hundreds is a real cluster-scheduler cost — k > 1000 warns loudly
@@ -1599,26 +1561,16 @@ def kcenter_coreset(
     selected = [(first[0]["__id"], list(first[0]["__v"]))]
     spark = df.sparkSession
     # running min cosine-distance to the selected set; each step folds
-    # in ONLY the newest center.
-    # Block hygiene: DataFrame.unpersist() is a NO-OP for localCheckpoint
-    # blocks (they bypass the CacheManager), so superseded folds are
-    # freed at the RDD layer — each step diffs the JVM persistent-RDD id
-    # set to learn which ids the new checkpoint owns, and unpersists the
-    # previous step's ids once the new state is materialized. Assumes
-    # the single-threaded driver this engine runs (a concurrent persist
-    # landing mid-step would be misattributed); keeps executor storage
-    # at one state copy instead of k.
-    sc = spark.sparkContext
-    base_ids = _rdd_ids(sc)
+    # in ONLY the newest center
     state = nz.select("__id", "__v", F.lit(None).cast("double").alias("__d"))
-    prev_ids: set = set()
     for _ in range(1, k):
+        prev = state
         cid, cvec = selected[-1]
         cv = F.array(*[F.lit(float(x)) for x in cvec])
         nd = F.round(
             F.lit(1.0) - cosine_similarity(F.col("__v"), cv) + F.lit(1e-12), 6
         )
-        state = state.select(
+        state = prev.select(
             "__id",
             "__v",
             F.when(F.col("__d").isNull(), nd)
@@ -1638,35 +1590,16 @@ def kcenter_coreset(
             .limit(1)
             .collect()
         )
-        # the collect above materialized this step's checkpoint, so the
-        # previous one is dead lineage — drop its blocks at the RDD
-        # layer (see the hygiene note above)
-        cur_ids = _rdd_ids(sc)
-        new_ids = cur_ids - base_ids - prev_ids
-        _free_rdd_ids(sc, prev_ids)
-        prev_ids = new_ids
+        # the collect materialized this step's checkpoint: the previous
+        # one is dead lineage
+        release(prev)
         if not far:
             break  # fewer usable vectors than k: return what exists
         selected.append((far[0]["__id"], list(far[0]["__v"])))
-    _free_rdd_ids(sc, prev_ids)
+    release(state)
     schema = T.StructType().add(id_col, nz.schema["__id"].dataType)
     rows = [(i, r + 1) for r, (i, _) in enumerate(selected)]
     return local_frame(spark, rows, schema.add("selection_rank", T.LongType()))
-
-
-def _rdd_ids(sc) -> set:
-    """JVM persistent-RDD id snapshot (localCheckpoint blocks bypass the
-    CacheManager, so hygiene works at the RDD layer — the kcenter
-    pattern). Assumes the single-threaded driver this engine runs."""
-    return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-def _free_rdd_ids(sc, ids: set) -> None:
-    jmap = sc._jsc.getPersistentRDDs()
-    for i in ids:
-        jrdd = jmap.get(i)
-        if jrdd is not None:
-            jrdd.unpersist(False)
 
 
 def mmr_topk(

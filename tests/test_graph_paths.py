@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from orientdb_spark.graph import Graph
+from tests.conftest import persisted_rdd_ids
 
 
 def _graph(spark, edges, weights=None, vertices=None):
@@ -766,3 +767,31 @@ def test_degree_distribution_hand_checked(spark):
     assert got[0]["n_vertices"] == 3          # leaves, degree 1
     assert got[-1]["n_vertices"] == 1         # isolate 'e' (self-loop b drops)
     assert got[-1]["min_degree"] == 0 and got[-1]["lo"] == 0
+
+
+# K4 on a-d with the tail d-e-f-g-h: CC needs several rounds, and the
+# 2-core peels the tail one vertex per round
+_RELEASE_EDGES = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
+                  ("c", "d"), ("d", "e"), ("e", "f"), ("f", "g"), ("g", "h")]
+
+
+@pytest.mark.parametrize("run, held", [
+    (lambda g: g.connected_components(method="two_phase"), 1),
+    (lambda g: g.connected_components(method="label_prop"), 1),
+    (lambda g: g.pagerank(iterations=10), 1),
+    (lambda g: g.hits(iterations=2), 2),
+    (lambda g: g.shortest_paths(["a"], iterations=6), 1),
+    (lambda g: g.label_propagation(iterations=6), 1),
+    (lambda g: g.kcore(2), 1),
+], ids=["cc_two_phase", "cc_label_prop", "pagerank", "hits",
+        "shortest_paths", "label_propagation", "kcore"])
+def test_state_loops_release_superseded_state(spark, run, held):
+    """A state loop frees each state it replaces: after the call and a
+    read of its result, only the checkpoints the returned frame reads
+    stay persisted (one, or HITS's hub and authority vectors)."""
+    g = _graph(spark, _RELEASE_EDGES)
+    before = persisted_rdd_ids(spark)
+    out = run(g)
+    assert out.count() > 0
+    left = persisted_rdd_ids(spark) - before
+    assert len(left) <= held, f"persisted RDDs left: {sorted(left)}"

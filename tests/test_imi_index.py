@@ -18,6 +18,7 @@ from orientdb_spark.pipeline.similarity import (
     estimated_imi_recall,
     imi_topk,
 )
+from tests.conftest import persisted_rdd_ids
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -148,6 +149,19 @@ def test_imi_build_once_query_many(spark):
         quantize.pq_fit, quantize.pq_encode = orig_fit, orig_enc
     assert r2 == r1
     idx.unpersist()
+
+
+def test_unpersist_frees_checkpoint_blocks(spark):
+    """build(persist=True) owns a localCheckpoint that
+    DataFrame.unpersist() cannot release — ImiIndex.unpersist() must
+    free it (zero leaked persistent RDDs)."""
+    embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    before = persisted_rdd_ids(spark)
+    idx = ImiIndex.build(embs, k_half=4, refine_iters=0, persist=True)
+    assert idx.corpus_cells.count() == embs.count()
+    idx.unpersist()
+    leaked = persisted_rdd_ids(spark) - before
+    assert not leaked, f"leaked persistent RDD ids: {sorted(leaked)}"
 
 
 def test_imi_oneshot_agrees_with_index(spark):

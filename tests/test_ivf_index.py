@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from orientdb_spark.pipeline import similarity
+from tests.conftest import persisted_rdd_ids
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -292,10 +293,8 @@ def test_unpersist_frees_checkpoint_blocks(spark):
     """build(persist=True) and extend() own localCheckpoint blocks that
     DataFrame.unpersist() cannot release — IvfIndex.unpersist() must
     free them at the RDD layer (zero leaked persistent RDDs)."""
-    from orientdb_spark.pipeline.similarity import _rdd_ids
-
     embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    before = _rdd_ids(spark.sparkContext)
+    before = persisted_rdd_ids(spark)
     idx = similarity.IvfIndex.build(embs, n_cells=8, refine_iters=0, persist=True)
     merged = idx.extend(
         embs.filter(F.col("vec_id") < 3).withColumn(
@@ -305,7 +304,7 @@ def test_unpersist_frees_checkpoint_blocks(spark):
     assert merged.corpus_cells.count() == embs.count() + 3
     merged.unpersist()
     idx.unpersist()
-    leaked = _rdd_ids(spark.sparkContext) - before
+    leaked = persisted_rdd_ids(spark) - before
     assert not leaked, f"leaked persistent RDD ids: {sorted(leaked)}"
 
 

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import pathlib
 
+import pytest
+
 from orientdb_spark import Engine, Graph
 from orientdb_spark.fulltext import phrase_search, positional_index
 from orientdb_spark.session import local_frame
@@ -64,3 +66,8 @@ def test_zero_row_local_frame_keeps_schema(spark):
     _assert_local(df)
     assert df.schema.simpleString() == "struct<id:bigint,v:array<double>,m:map<string,string>>"
     assert df.count() == 0
+
+
+def test_wrong_value_type_names_the_column(spark):
+    with pytest.raises(TypeError, match="column 'vid' is declared string"):
+        local_frame(spark, [("a", 1)], "src string, vid string")

@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 
 from orientdb_spark.pipeline import similarity as S
+from tests.conftest import persisted_rdd_ids
 
 
 def _h60(s: str) -> int:
@@ -276,12 +277,10 @@ def test_kcenter_frees_superseded_checkpoint_blocks(spark):
     the fold hygiene works at the RDD layer: after a k=12 run, executor
     block storage must hold no more persistent RDDs than before the run
     (every superseded fold's checkpoint freed, including the last)."""
-    sc = spark.sparkContext
-    before = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
+    before = persisted_rdd_ids(spark)
     embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     S.kcenter_coreset(embs, k=12).collect()
-    after = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-    leaked = after - before
+    leaked = persisted_rdd_ids(spark) - before
     assert not leaked, f"leaked persistent RDD ids: {sorted(leaked)}"
 
 
@@ -345,15 +344,13 @@ def test_mmr_frees_superseded_checkpoint_blocks(spark):
     (they back the returned frame)."""
     from pyspark.sql import functions as F
 
-    sc = spark.sparkContext
-    before = S._rdd_ids(sc)
+    before = persisted_rdd_ids(spark)
     embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     out = S.mmr_topk(embs, embs.filter(F.col("vec_id") < 4), k=5, m=20)
     assert out.count() == 20
-    leaked = S._rdd_ids(sc) - before
+    leaked = persisted_rdd_ids(spark) - before
     # exactly one surviving checkpoint: the returned state
     assert len(leaked) <= 1, f"leaked persistent RDD ids: {sorted(leaked)}"
-    S._free_rdd_ids(sc, leaked)
 
 
 def test_mmr_partition_invariance(spark):

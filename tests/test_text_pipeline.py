@@ -440,32 +440,6 @@ def test_unicode_normalize_forms(spark):
         text.unicode_normalize(d, form="NFX")
 
 
-def test_winnow_guarantee_holds_under_fast_hash(spark, docs):
-    """The winnowing overlap guarantee is hash-impl-agnostic: flipping
-    to the xxhash64 production path must still make docs sharing a
-    long substring share a fingerprint (values differ, properties
-    don't). Resets the impl even on failure."""
-    from orientdb_spark.pipeline import common
-
-    common.use_fast_hash(True)
-    try:
-        fps = text.winnow_fingerprints(docs, k=5, window=4)
-        a = fps.withColumnRenamed("doc_id", "id_a")
-        b = fps.withColumnRenamed("doc_id", "id_b")
-        shared = {
-            (r["id_a"], r["id_b"])
-            for r in a.join(b, "fingerprint")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates()
-            .collect()
-        }
-        assert (1, 2) in shared       # docs sharing the long substring
-        assert (1, 3) not in shared   # unrelated docs
-    finally:
-        common.use_fast_hash(False)
-
-
 def test_vocabulary_rank_order_and_floor(spark):
     from orientdb_spark.pipeline.text import vocabulary
 
