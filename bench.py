@@ -1,5 +1,8 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs the headline queries (the registry entries
+tagged "headline": one or more per major subsystem — SQL agg, link-join,
+sort/top-k, window, traverse, graph analytics, sessionize, dedup, ANN,
+text, sampling) at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
@@ -19,71 +22,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-# headline set: one per major subsystem (SQL agg, link-join, sort/topk,
-# window, traverse, graph analytics, sessionize, dedup, ANN, text)
-HEADLINE = [
-    "tpch_q1_pricing",
-    "tpch_q3_shipping",
-    "tpch_q6_forecast",
-    "tpch_q5_local_supplier",
-    "tpch_q10_returns",
-    "link_nav_2hop",
-    "group_having_order",
-    "order_multikey_topk",
-    "window_rank_topn",
-    "compound_predicates",
-    "traverse_reachability",
-    "set_operations",
-    "graph_connected_components",
-    "graph_pagerank",
-    "event_window_agg",
-    "event_sessionize",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_embedding_cosine",
-    "sim_topk_bruteforce",
-    "text_quality_score",
-    "containstext_fallback",
-    # r10 training-data operators (r10 verdict item 5): among the most
-    # expensive operators in the repo — round-over-round regression
-    # tracking must see them; the multi-second ones ride the 3-sample
-    # noisy floor below
-    "dedup_semantic",
-    "dedup_embedding_decontaminate",
-    "sample_dsir",
-    "sample_kcenter_coreset",
-    "sample_token_budget",
-    # r11 continuation operators above the ~1.5 s line at sf0.1
-    # (train+score composition 1.8 s, CCNet buckets 1.6 s, cluster-keyed
-    # split 2.9 s min-of-3 on arrival): bench-visible from day one so
-    # regression tracking starts with their first record
-    "text_classifier_score",
-    "sample_perplexity_buckets",
-    "sample_leakage_safe_split",
-    # r11 continuation-2: retrieval serving (MMR re-rank, hybrid RRF),
-    # tokenizer application, domain-mixture reweighting — bench-visible
-    # from their first record
-    "sim_topk_mmr",
-    "sim_hybrid_rrf",
-    # r12: margin-based bitext mining (quadratic-baseline candidate
-    # stage over the parity split — bench-visible from its first record)
-    "sim_bitext_mine",
-    # r13: the ANN candidate path (derived IVF cells/probes feeding the
-    # same margin stages) — benched NEXT TO the exact row so the
-    # quadratic-vs-indexed gap is tracked per round (it widens with SF;
-    # at sf0.1 the probed fraction is ~40% so the win is modest)
-    "sim_bitext_mine_ivf",
-    "text_bpe_encode",
-    "sample_domain_reweight",
-    "sample_curriculum_order",
-    "profile_dataset_card",
-    # r13: BM25 ranked retrieval — the first pure-lexical ranked row
-    # (hybrid RRF benches fusion; this isolates the posting-join +
-    # WindowGroupLimit top-k shape). sample_unimax stays out like
-    # temperature_mixture: S-row window arithmetic has no bench signal.
-    "text_bm25_topk",
-]
 
 
 def _force(df) -> None:
@@ -125,6 +63,7 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
     from orientdb_spark import get_spark
+    from orientdb_spark.entries import tagged
 
     spark = get_spark(app_name="orientdb_spark_bench")
     qs = entry_mod.queries()
@@ -144,32 +83,10 @@ def main() -> None:
     # an explicitly-requested repeat must never be silently capped
     max_repeat = max(max_repeat, repeat)
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "4"))
-    # the documented multi-second swingers (±1.2 s run-to-run on this
-    # shared host) get a 3-sample floor regardless of the budget, so
-    # round-over-round deltas measure code, not the scheduler
-    noisy_min = {
-        "graph_connected_components": 3,
-        "graph_pagerank": 3,
-        "dedup_embedding_cosine": 3,
-        # multi-second r10 operators (min-of-2 standalone: dsir 2.73 s,
-        # kcenter 3.88 s, semantic 1.41 s): same 3-sample floor so
-        # their deltas measure code, not the scheduler
-        "dedup_semantic": 3,
-        "sample_dsir": 3,
-        "sample_kcenter_coreset": 3,
-        # r11 continuation multi-second entries (min-of-3 on arrival:
-        # classifier 1.8 s, perplexity buckets 1.6 s, leakage split 2.9 s)
-        "text_classifier_score": 3,
-        "sample_perplexity_buckets": 3,
-        "sample_leakage_safe_split": 3,
-        # continuation-2 multi-second entries: BPE train+encode runs 10
-        # sequential merge rounds; domain reweight rides the lm_score
-        # corpus pass
-        "text_bpe_encode": 3,
-        "sample_domain_reweight": 3,
-        # curriculum staging also rides the lm_score corpus pass
-        "sample_curriculum_order": 3,
-    }
+    # the multi-second swingers (entries tagged "noisy": ±1.2 s run-to-run
+    # on this shared host) get a 3-sample floor regardless of the budget,
+    # so round-over-round deltas measure code, not the scheduler
+    noisy = set(tagged("noisy"))
     timings: dict[str, float] = {}
     samples: dict[str, int] = {}
     # total timed seconds per query INCLUDING warm-up — the wall-clock
@@ -184,10 +101,10 @@ def main() -> None:
     # an official signal must never be 1-2 observations (r12 verdict
     # item 1). 3 samples is the floor the noisy set already proved out.
     hard_floor = int(os.environ.get("SPARK_GRAFT_BENCH_MIN_SAMPLES", "3"))
-    for name in HEADLINE:
+    for name in tagged("headline"):
         fn = qs[name]
         best = None
-        min_n = max(repeat, hard_floor, noisy_min.get(name, 0))
+        min_n = max(repeat, hard_floor, 3 if name in noisy else 0)
         try:
             # one untimed warm-up: the sf5 study showed a cold page
             # cache right after heavy unrelated IO can inflate a

@@ -9,49 +9,29 @@ therefore mirror only a cross-family smoke subset; set
 ``SPARK_GRAFT_FULL_ORACLE=1`` to run every entry (do this before
 shipping any change that touches an operator's results)."""
 
+import json
 import os
+import pathlib
+import re
 
 import pytest
 
 import __spark_entry__ as entrymod
+from orientdb_spark.entries import REGISTRY, tagged
 from tests.conftest import SF_DIR, assert_matches_oracle
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
 
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+
 FULL_ORACLE = os.environ.get("SPARK_GRAFT_FULL_ORACLE") == "1"
 
-# Default smoke subset: one-per-family over the operator surfaces (SQL
-# agg/join/window/set, traverse, graph, events, dedup, ANN, text, sampling,
-# profile) so a broken shared primitive still fails fast without the flag.
-ORACLE_SMOKE = [
-    "tpch_q1_pricing",
-    "tpch_q5_local_supplier",
-    "link_nav_2hop",
-    "window_rank_topn",
-    "set_operations",
-    "traverse_reachability",
-    "graph_pagerank",
-    "graph_connected_components",
-    "event_sessionize",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_embedding_cosine",
-    "sim_topk_bruteforce",
-    "sim_topk_mmr",
-    "sim_bitext_mine",
-    "text_quality_score",
-    "text_bm25_topk",
-    "sample_dsir",
-    "sample_domain_reweight",
-    "profile_dataset_card",
-]
-
-_MIRROR_NAMES = (
-    sorted(ORACLES.keys())
-    if FULL_ORACLE
-    else [n for n in ORACLE_SMOKE if n in ORACLES]
-)
+# Default smoke subset: the entries tagged "smoke", one-per-family over
+# the operator surfaces (SQL agg/join/window/set, traverse, graph,
+# events, dedup, ANN, text, sampling, profile) so a broken shared
+# primitive still fails fast without the flag.
+_MIRROR_NAMES = sorted(ORACLES) if FULL_ORACLE else tagged("smoke")
 
 
 def test_entry_smoke(spark):
@@ -66,11 +46,14 @@ def test_oracle_keys_subset():
     assert not missing, f"oracle entries without queries: {missing}"
 
 
-def test_oracle_smoke_names_are_valid():
-    """The smoke list must track registry renames: a stale name here
-    would silently shrink default-mode mirror coverage."""
-    missing = set(ORACLE_SMOKE) - set(ORACLES)
-    assert not missing, f"ORACLE_SMOKE names without oracles: {sorted(missing)}"
+def test_each_entry_has_an_oracle_or_a_rows_only_reason():
+    """The driver hash-checks an entry against its oracle; an entry with
+    none must say why, and no entry may have both."""
+    both_or_neither = [
+        n for n, e in REGISTRY.items() if (e.oracle is None) == (not e.rows_only)
+    ]
+    assert not both_or_neither, both_or_neither
+    assert set(QUERIES) == set(REGISTRY)
 
 
 @pytest.mark.parametrize("name", _MIRROR_NAMES)
@@ -162,33 +145,50 @@ def test_fingerprint_and_simhash_duplicate_groups(spark):
     assert (1, 4) in ids and (1, 2) not in ids
 
 
-def test_bench_headline_names_are_valid():
-    """A renamed entry must fail CI, not the driver's bench run."""
-    import bench
-
-    missing = set(bench.HEADLINE) - set(QUERIES)
-    assert not missing, f"bench.HEADLINE names unknown queries: {sorted(missing)}"
-
-
 def test_driver_front_slots_all_oracle_bearing():
-    """Rotation contract, r9 form: the refresh rotation deliberately
-    slots rows-only-by-design entries — those exact entries (and only
-    those) may lack oracles; any other oracle-less slot (a rename, an
-    oracle drop) must fail CI, not the driver run. Note sim_topk_ivfpq
-    / sim_topk_lsh / sim_topk_imi are NOT here (r9 upgraded all three
-    to oracle-exact deterministic replays), and neither are
-    sim_topk_ivf / embedding_kmeans / text_bpe_merges (r11 did the
-    same for the whole derivable tail — only the two permanent
-    rows-only entries remain)."""
-    ROWS_ONLY_BY_DESIGN = {
-        "embedding_pca",          # LAPACK eigenbasis; numpy-agreement-gated
-        "approx_distinct_parts",  # approxCountDistinct dialect surface
-    }
+    """The driver records the first 50 keys: only entries declared
+    rows-only (a reason instead of an oracle) may lack an oracle there;
+    any other oracle-less slot (a rename, an oracle drop) must fail CI,
+    not the driver run."""
+    rows_only = {n for n, e in REGISTRY.items() if e.rows_only}
     front = list(QUERIES)[:50]
     assert len(front) == 50
-    missing = [n for n in front if n not in ORACLES and n not in ROWS_ONLY_BY_DESIGN]
+    missing = [n for n in front if n not in ORACLES and n not in rows_only]
     assert not missing, f"front-50 slots without oracles: {missing}"
-    # and the exception list itself stays honest: each is really in the
+    # and the rows-only declarations stay honest: each is really in the
     # registry and really lacks an oracle
-    for n in ROWS_ONLY_BY_DESIGN:
+    for n in rows_only:
         assert n in QUERIES and n not in ORACLES, n
+
+
+def _newest_driver_rounds() -> dict[str, int]:
+    newest: dict[str, int] = {}
+    for path in ROOT.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m:
+            for name in json.loads(path.read_text()):
+                newest[name] = max(newest.get(name, 0), int(m.group(1)))
+    return newest
+
+
+def test_queries_lead_with_never_recorded_then_oldest_records():
+    """queries() order is the driver's rotation: the entries with no
+    CORRECTNESS_r<NN>.json record first, then by newest record, oldest
+    first — so the 50-slot record always covers the stalest entries."""
+    newest = _newest_driver_rounds()
+    order = list(QUERIES)
+    never = [n for n in order if n not in newest]
+    assert order[: len(never)] == never
+    rounds = [newest[n] for n in order[len(never):]]
+    assert rounds == sorted(rounds)
+
+
+def test_tools_resolve_the_repo_from_their_own_path():
+    """A tool run from another checkout must judge that checkout."""
+    hits = [
+        f"{p.relative_to(ROOT)}:{i}"
+        for p in sorted((ROOT / "tools").rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "/root/repo" in line
+    ]
+    assert not hits, hits

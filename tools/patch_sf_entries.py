@@ -1,9 +1,9 @@
-"""Patch missing SF1_ENTRIES rows into an existing CORRECTNESS_<sfx>.json
+"""Patch missing sf-scale rows into an existing CORRECTNESS_<sfx>.json
 (the entry list can grow while a multi-hour sweep is already running):
 
     python tools/patch_sf_entries.py /tmp/sf5 sf5 [name ...]
 
-With no names, every SF1_ENTRIES entry absent from the JSON is run.
+With no names, every entry tagged "sf_scale" absent from the JSON is run.
 Reuses sf_artifacts.compare_entry so the record shape and hash
 convention are identical to a full sweep; provenance counters are
 updated in place.
@@ -12,12 +12,14 @@ updated in place.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
-from sf_artifacts import SF1_ENTRIES, compare_entry  # noqa: E402
+from sf_artifacts import compare_entry  # noqa: E402
 
 
 def main():
@@ -25,11 +27,12 @@ def main():
 
     import __spark_entry__ as entrymod
     from orientdb_spark import get_spark
+    from orientdb_spark.entries import tagged
 
     sf_dir, suffix = sys.argv[1], sys.argv[2]
-    path = f"/root/repo/CORRECTNESS_{suffix}.json"
+    path = os.path.join(ROOT, f"CORRECTNESS_{suffix}.json")
     corr = json.load(open(path))
-    names = sys.argv[3:] or [n for n in SF1_ENTRIES if n not in corr]
+    names = sys.argv[3:] or [n for n in tagged("sf_scale") if n not in corr]
     if not names:
         print("nothing to patch")
         return
@@ -46,7 +49,7 @@ def main():
     import subprocess
 
     commit = subprocess.run(
-        ["git", "-C", "/root/repo", "rev-parse", "--short", "HEAD"],
+        ["git", "-C", ROOT, "rev-parse", "--short", "HEAD"],
         capture_output=True, text=True,
     ).stdout.strip() or "unknown"
     for name in names:

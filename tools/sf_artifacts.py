@@ -6,11 +6,16 @@ sf1 claims re-runnable from JSON, not prose).
                                                  #    + BENCH_sf1.json
 
 CORRECTNESS_sf1.json mirrors the driver's shape (per-entry rows_match /
-schema_match / hash_match / spark_rows / oracle_rows / err) over a fixed
-representative entry list whose DuckDB oracles stay tractable at sf1
-(sequential-replay oracles like CUSUM/Kruskal and the sparse-exactness
-HyperBall fixture are excluded by design — their regimes are sf<=0.01
-constructions). BENCH_sf1.json is bench.py's own output plus a
+schema_match / hash_match / spark_rows / oracle_rows / err) over the
+entries tagged ``sf_scale``: every subsystem, each with a DuckDB oracle
+that stays tractable at sf1 (linear, or bounded by fixed query panels and
+bucket caps). Excluded by that rule: sequential-replay oracles like
+CUSUM/Kruskal and the sparse-exactness HyperBall fixture (sf<=0.01
+constructions), quadratic pair scans (sim_bitext_mine; dedup_semantic's
+within-cell scan over a fixed 16 cells) and sim_index_persist (a multi-GB
+index write per run; its file pruning is plan-pinned in
+tests/test_ivf_index.py). Time a new oracle at sf1 before tagging it.
+BENCH_sf1.json is bench.py's own output plus a
 provenance block naming the generator and its scale factor.
 """
 
@@ -23,220 +28,8 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-# Entries spanning every subsystem whose oracle SQL scales to sf1:
-# TPC-H aggregates/joins, windows, temporal/event ops, quality
-# contracts, profiling, text featurizers (pure-Column), sampling,
-# dedup (exact + blocked near-dup), sketch audits, storage.
-SF1_ENTRIES = [
-    "tpch_q1_pricing",
-    "tpch_q3_shipping",
-    "group_having_order",
-    "order_multikey_topk",
-    "window_rank_topn",
-    "link_nav_2hop",
-    "quality_fd_check",
-    "quality_expectations",
-    "quality_table_digest",
-    "event_gap_fill",
-    "event_rolling_avg",
-    "event_time_weighted_avg",
-    "event_interval_overlap",
-    "event_funnel_rates",
-    "profile_quantile_bins",
-    "profile_entropy",
-    "text_quality_score",
-    "text_token_budget",
-    "text_feature_hashing",
-    "text_hash_embedding",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "hll_distinct_merge",
-    "sample_weighted",
-    # ANN serving path (r8 verdict item 6): the deterministic-replay
-    # PQ-ADC and IVFADC oracles are pure h60 arithmetic — they scale to
-    # any SF, so the billion-vector serving shape gets above-driver
-    # hash evidence too
-    "sim_topk_pq",
-    "sim_topk_ivfpq",
-    # graph layer (r9 verdict item 4): CC and BFS were benched at sf10
-    # but never hash-verified above the driver SF; their unrolled-CTE
-    # oracles are SF-independent, so the graph family gets above-driver
-    # hash evidence too
-    "graph_connected_components",
-    "graph_bfs_levels",
-    # DSIR importance resampling (new r10): linear gram-stream oracle,
-    # 3.2 s at sf1 in DuckDB — scales. (dedup_semantic is excluded by
-    # the tractability rule: its oracle is within-cell quadratic over
-    # FIXED 16 cells.)
-    "sample_dsir",
-    # SemDeDup, cells-scale-with-N variant (r10 verdict item 4): the
-    # LSH-bucketed clusterer grows 2^planes with N so the within-bucket
-    # quadratic oracle stays O(N·~32) at every SF — the semantic-dedup
-    # family's above-driver hash evidence
-    "dedup_semantic_scaled",
-    # r11 continuation: the sub-second r11 entries whose oracles scale
-    # (NOTES_r11 r12 pointer, pre-empted) — incremental MinHash dedup
-    # (the minhash replay already runs at sf5/sf10 for the full-run
-    # entry), the per-epoch shard permutation (pure h60 arithmetic),
-    # and the winnow-replay decontamination report (linear gram stream)
-    "dedup_minhash_incremental",
-    "sample_epoch_shuffle",
-    "dedup_decontaminate_report",
-    # model-based curation family (r11 continuation): the GD replay is
-    # d+1 weights x iters tiny CTEs over a linear token stream; the
-    # CCNet bucket oracle rides the lm_score replay (value-exact at
-    # sf1/sf5/sf10 since r6); the pair filter is one linear join
-    "text_classifier_train",
-    "text_classifier_score",
-    "sample_perplexity_buckets",
-    "multimodal_pair_filter",
-    # retrieval serving + tokenizer apply + domain mixture (r11
-    # continuation-2): the MMR replay is the brute-force cosine scan
-    # (linear in N, Q·m² CTEs are N-independent); hybrid RRF is one
-    # posting join + one cosine scan; the BPE-encode replay adds one
-    # vocab-sized CTE + a linear doc-word join to the merges replay;
-    # domain reweight rides the linear lm_score gram stream with S-row
-    # iteration CTEs
-    "sim_topk_mmr",
-    "sim_hybrid_rrf",
-    "text_bpe_encode",
-    "sample_domain_reweight",
-    # release/curriculum layer: curriculum rides the same linear
-    # lm_score replay; the card and DP counts are single-scan aggregates
-    "sample_curriculum_order",
-    "profile_dataset_card",
-    "profile_dp_counts",
-    # index lifecycle: the incremental-ingest replay covers the fixed
-    # h60 quantizer + union postings at every SF (sim_index_persist is
-    # value-identical to the same replay but adds a multi-GB index
-    # write per artifact run — the file-pruning feature it uniquely
-    # adds is plan-pinned in tests/test_ivf_index.py instead)
-    "sim_index_incremental",
-    # data-layout + governance (continuation-2): z-order is pure
-    # floor/shift arithmetic; the erasure cascade is count replays over
-    # the chunk-enumeration arithmetic — both linear
-    "scale_zorder_layout",
-    "pipeline_forget_cascade",
-    # incremental-rollup maintenance identity (full-recompute oracle)
-    "rollup_incremental_refresh",
-    # r12: temperature-scaled mixture — the quota-derivation oracle is
-    # one aggregate + S-row windows + a hash-rank window, linear at any
-    # SF. (sim_bitext_mine is excluded by the tractability rule: its
-    # oracle is the full quadratic pair scan.)
-    "sample_temperature_mixture",
-    # r12: calibration rides the classifier GD replay (already in this
-    # list twice) + a B-row binning CTE — linear
-    "text_classifier_calibration",
-    # r13 additions (both timed at sf1 before joining, per the r11
-    # rule): DPR hard-negative mining and the Min-K%-prob audit (the
-    # latter rides the lm_score bigram model — single-pass oracle, not
-    # an unrolled chain)
-    "sim_hard_negatives",
-    "text_min_k_prob",
-    # r13 continuation (timed at sf1 on arrival: both replays complete
-    # in ~1 min incl. session startup): BM25 is one posting join +
-    # single-scan corpus stats — linear; UniMax is one aggregate +
-    # S-row waterfill windows + the hash-rank window, the
-    # temperature_mixture shape
-    "text_bm25_topk",
-    "sample_unimax",
-    # r13 continuation-2 (timed at sf1 on arrival: 3/3 in one minute
-    # incl. session startup): Gopher rule table is one scan, ANN
-    # recall composes the fixed IVF replay with the bruteforce oracle
-    # over a 10-query panel, compaction plans a 150-row manifest
-    "text_gopher_rules",
-    "sim_ann_recall",
-    "scale_compaction_plan",
-    # r13 continuation-3: epochs accounting is one groupBy + S-row
-    # arithmetic; matryoshka is len(dims)+1 panel passes (8 queries)
-    "sample_epochs_report",
-    "sim_matryoshka_recall",
-    # r13 continuation-4: the streaming near-dup batch path — the
-    # minhash replay plus bucket-ranked pair joins (bounded by bucket
-    # caps, never all-pairs)
-    "dedup_near_dup_stream",
-    # r13 continuation-5: MRR/nDCG over the fixed IVF replay — panel
-    # work only (the ranked side is the already-listed IVF machinery)
-    "sim_rank_eval",
-    # r13 continuation-6: modularity composes the LPA replay (already
-    # listed via graph entries) + two aggregations; benford is one
-    # scan + groups x 9 rows
-    "graph_modularity",
-    "profile_benford_audit",
-    # r13 continuation-7: the IVF occupancy audit is the already-listed
-    # 16-cell assignment replay + one GROUP BY to <= 16 rows
-    "sim_index_health",
-    # r13 continuation-8: histogram drift is two scans folded into ONE
-    # groupBy to <= n_bins rows + bin-bounded windows
-    "profile_distribution_drift",
-    # r13 continuation-9: FIM is one exchange-free in-row projection —
-    # the scale question is string-volume, which sf10 exercises
-    "text_fim_transform",
-    # r13 continuation-10: span corruption is the same exchange-free
-    # in-row shape with per-token list arithmetic
-    "text_span_corruption",
-    # r13 continuation-11: precision/recall/AP over the fixed IVF
-    # replay — small-integer-ratio panel arithmetic on the already
-    # listed ranked side
-    "sim_pr_eval",
-    # r13 continuation-12: l-diversity is two stacked integer
-    # aggregations over the k-anonymity fixture — pure keyed counts
-    "profile_l_diversity",
-    # r13 continuation-13: assortativity is the stub groupBy + two
-    # vid equi-joins + ONE 1-row aggregate — linear at any SF
-    "graph_assortativity",
-    # r13 continuation-14: readability is a zero-exchange in-row scan
-    # (the gopher_rules shape)
-    "text_readability",
-    # r13 continuation-15: attribution is ONE user-keyed window pass
-    # (the asof carry-forward shape) — linear at any SF
-    "event_attribution",
-    # r13 continuation-16: the zone-map audit is the zorder replay
-    # (already listed) + ONE map-side groupBy to per-bucket rows
-    "scale_zone_map_audit",
-    # r13 continuation-17: the PR-curve sweep rides the classifier GD
-    # replay (already listed three times) + one literal fan-out groupBy
-    "text_classifier_pr_curve",
-    # r13 continuation-18: Moore-Lewis rides the linear lm_score gram
-    # stream twice over ONE shared pc frame — linear at any SF
-    "sample_moore_lewis",
-    # r13 continuation-19: Rocchio PRF is the (already listed) BM25
-    # posting replay run twice over ONE tf table + panel-sized
-    # expansion windows — linear at any SF
-    "text_rocchio_prf",
-    # r13 continuation-20: heavy hitters in the exactness regime is a
-    # value_counts fast path per group + a GROUP BY/rank oracle
-    "event_heavy_hitters_stream",
-    # r13 continuation-21: length buckets is one scan + a literal CASE
-    # + ONE groupBy to len(bounds)+1 rows
-    "sample_length_buckets",
-    # r13 continuation-22: MAD flags are two keyed quantile_cont
-    # aggregations + two equi-joins — linear at any SF
-    "event_anomaly_mad",
-    # r13 continuation-23: degree histogram is the stub groupBy + a
-    # literal comparison chain + ONE groupBy to <= 41 rows
-    "graph_degree_distribution",
-    # r13 continuation-24: scene cuts are the frame fan-out + ONE
-    # doc-keyed lag window; the oracle chunks text and sums ascii codes
-    "multimodal_scene_cuts",
-    # r13 continuation-25: the OOD audit is the centroid replay + one
-    # broadcast cosine pass + a label-keyed quantile — linear
-    "embedding_ood_audit",
-    # r13 continuation-26: the cluster-size report is two stacked
-    # hash-groupBys (corpus -> clusters -> <= 10 buckets)
-    "dedup_cluster_size_report",
-    # r13 continuation-27: the source rollup rides the (already
-    # listed) quality replay + ONE groupBy to source-count rows
-    "text_source_quality_rollup",
-    # r13 continuation-28: SLO burn is one integer bucket projection +
-    # ONE groupBy to window-count rows
-    "event_slo_burn",
-    # r13 continuation-29: RAKE is doc-keyed windows/groupBys sharing
-    # one partitioning — linear; the oracle mirrors stage by stage
-    "text_rake_keyphrases",
-]
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def _norm(v):
@@ -302,6 +95,7 @@ def main():
 
     import __spark_entry__ as entrymod
     from orientdb_spark import get_spark
+    from orientdb_spark.entries import tagged
 
     # --sweep-only (r11 verdict item 1): regenerate the correctness
     # sweep WITHOUT the two standalone bench runs — the per-SF bench
@@ -315,8 +109,7 @@ def main():
     suffix = args[1] if len(args) > 1 else "sf1"
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    missing = [n for n in SF1_ENTRIES if n not in queries or n not in oracles]
-    assert not missing, f"unknown or oracle-less entries: {missing}"
+    entries = tagged("sf_scale")
 
     spark = get_spark(app_name="sf_artifacts")
     con = duckdb.connect()
@@ -328,7 +121,7 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     out = {}
-    for name in SF1_ENTRIES:
+    for name in entries:
         out[name] = compare_entry(spark, con, queries, oracles, name, sf_dir)
         status = "OK" if out[name]["hash_match"] else f"FAIL {out[name]['err']}"
         print(f"{name}: {status} ({out[name]['spark_rows']} rows)", flush=True)
@@ -337,23 +130,23 @@ def main():
     # so a later patch_sf_entries.py touch-up is distinguishable from a
     # uniform full sweep
     commit = subprocess.run(
-        ["git", "-C", "/root/repo", "rev-parse", "--short", "HEAD"],
+        ["git", "-C", ROOT, "rev-parse", "--short", "HEAD"],
         capture_output=True, text=True,
     ).stdout.strip() or "unknown"
     corr = {
         "__provenance__": {
             "sf_dir": sf_dir,
             "generator": "tools/gen_sf.py (deterministic seeds 4201-4209)",
-            "entries": len(SF1_ENTRIES),
+            "entries": len(entries),
             "hash_green": ok,
             "mode": "sweep-only" if sweep_only else "sweep+bench",
             "commit": commit,
         },
         **out,
     }
-    with open(f"/root/repo/CORRECTNESS_{suffix}.json", "w") as f:
+    with open(os.path.join(ROOT, f"CORRECTNESS_{suffix}.json"), "w") as f:
         json.dump(corr, f, indent=2)
-    print(f"correctness: {ok}/{len(SF1_ENTRIES)} -> CORRECTNESS_{suffix}.json")
+    print(f"correctness: {ok}/{len(entries)} -> CORRECTNESS_{suffix}.json")
     spark.stop()
 
     if sweep_only:
@@ -371,12 +164,12 @@ def main():
     runs = []
     for _ in range(2):
         bench_out = subprocess.run(
-            [sys.executable, "/root/repo/bench.py"],
+            [sys.executable, os.path.join(ROOT, "bench.py")],
             env=env,
             capture_output=True,
             text=True,
             check=True,
-            cwd="/root/repo",
+            cwd=ROOT,
         ).stdout.strip().splitlines()[-1]
         runs.append(json.loads(bench_out))
     # snapshot the real per-run totals BEFORE any merging: runs[0] is
@@ -397,7 +190,7 @@ def main():
     bench["run_totals"] = run_totals
     bench["convention"] = "per-query min of 2 standalone runs (BENCH.md r10)"
     bench["provenance"] = corr["__provenance__"] | {"bench_sf_dir": sf_dir}
-    with open(f"/root/repo/BENCH_{suffix}.json", "w") as f:
+    with open(os.path.join(ROOT, f"BENCH_{suffix}.json"), "w") as f:
         json.dump(bench, f, indent=2)
     print(f"bench total {bench.get('value')} s (runs: {bench['run_totals']}) "
           f"-> BENCH_{suffix}.json")

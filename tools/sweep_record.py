@@ -3,8 +3,9 @@ driver's 50-slot front in the round they land:
 
     python tools/sweep_record.py <sf_dir> <suffix> name [name ...]
 
-Writes/updates ``CORRECTNESS_<suffix>.json`` (e.g. suffix ``r13_sweep``
--> the file the ``check_entries.py --never-recorded`` union reads) with
+Writes/updates ``CORRECTNESS_<suffix>.json`` (e.g. suffix ``r13_sweep``;
+``queries()`` and ``check_entries.py --never-recorded`` read only the
+driver's ``CORRECTNESS_r<NN>.json``, so these stay unrecorded) with
 one record per named entry, using the SAME compare/hash machinery as a
 driver-gate sweep (sf_artifacts.compare_entry). Provenance is explicit
 and in-file: ``mode: "builder-sweep (not driver)"`` plus the commit the
@@ -20,8 +21,9 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 from sf_artifacts import compare_entry  # noqa: E402
 
@@ -35,7 +37,7 @@ def main():
     if len(sys.argv) < 4:
         sys.exit(__doc__)
     sf_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
-    path = f"/root/repo/CORRECTNESS_{suffix}.json"
+    path = os.path.join(ROOT, f"CORRECTNESS_{suffix}.json")
     corr = json.load(open(path)) if os.path.exists(path) else {}
     queries, oracles = entrymod.queries(), entrymod.oracle_sql()
     unknown = [n for n in names if n not in queries or n not in oracles]
@@ -50,7 +52,7 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     commit = subprocess.run(
-        ["git", "-C", "/root/repo", "rev-parse", "--short", "HEAD"],
+        ["git", "-C", ROOT, "rev-parse", "--short", "HEAD"],
         capture_output=True, text=True,
     ).stdout.strip() or "unknown"
     for name in names:
