@@ -165,9 +165,6 @@ class Catalog:
             df = df.localCheckpoint(eager=True)
         cls.df = df
 
-    def drop_class(self, name: str) -> None:
-        self._classes.pop(name.lower(), None)
-
     # -- lookup ------------------------------------------------------------
 
     def has(self, name: str) -> bool:

@@ -130,8 +130,10 @@ class Engine:
         self._plan_cache.clear()  # a (re)registered class invalidates cached plans
 
     def register_function(self, name: str, builder, aggregate: bool = False) -> None:
-        """UDF surface (core:sql/OSQLEngine.java registerFunction:43-45)."""
+        """UDF surface (core:sql/OSQLEngine.java registerFunction:43-45).
+        A cached plan may have compiled the old meaning of ``name``."""
         self.functions.register(name, builder, aggregate)
+        self._plan_cache.clear()
 
     def register_operator(self, name: str, builder) -> None:
         """Custom WHERE binary operator (OSQLHelper.registerOperator,

@@ -6,7 +6,7 @@ below, which is the registry's declaration order. ``__spark_entry__``
 is the driver-facing facade over ``REGISTRY``.
 """
 
-from orientdb_spark.entries._registry import REGISTRY, tagged  # noqa: F401
+from orientdb_spark.entries._registry import REGISTRY, compare, oracle_db, tagged  # noqa: F401
 from orientdb_spark.entries import (  # noqa: F401  (declares the entries)
     sql,
     graph,

@@ -1,11 +1,14 @@
 """The entry registry: each entry is declared once, in its family module,
 with its builder, its DuckDB oracle (or the reason it has none) and its
 tags. ``@register`` declares a builder function; ``dsl`` declares an
-entry that is one engine-dialect statement.
+entry that is one engine-dialect statement. ``oracle_db`` and ``compare``
+are the one check of a frame against its oracle, shared by the tests
+and the tools.
 """
 
 from __future__ import annotations
 
+import math
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -16,7 +19,7 @@ Builder = Callable[[SparkSession, str], DataFrame]
 
 # headline: a bench.py row; noisy: a headline row that keeps a 3-sample
 # floor; smoke: in the default oracle mirror of tests/test_entry.py;
-# sf_scale: in the sf1/sf5/sf10 artifact sweep of tools/sf_artifacts.py
+# sf_scale: in the sf1/sf5/sf10 sweep (tools/check_entries.py --tag sf_scale)
 TAGS = frozenset({"headline", "noisy", "smoke", "sf_scale"})
 
 
@@ -59,6 +62,68 @@ def tagged(tag: str) -> list[str]:
     if tag not in TAGS:
         raise ValueError(f"unknown tag {tag!r}")
     return [name for name, e in REGISTRY.items() if tag in e.tags]
+
+
+# --- the oracle check ---------------------------------------------------------
+
+
+def oracle_db(sf_dir: str):
+    """A DuckDB connection with one view per testdata table in ``sf_dir``."""
+    import duckdb
+
+    from orientdb_spark.engine import TESTDATA_TABLES
+
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def compare(df: DataFrame, con, sql: str, ordered: bool = False) -> dict:
+    """Check ``df`` against the oracle ``sql`` on ``con``, as the driver
+    does: columns match by name, floats round to 6 dp, rows compare as a
+    multiset (in order if ``ordered``), and two values agree when their
+    strings do or, for two floats, within 1e-6. Returns the driver-shaped
+    record; ``err`` names the first disagreement. Spark and DuckDB errors
+    propagate."""
+    cols = sorted(df.columns)
+    got = [tuple(_round6(r[c]) for c in cols) for r in df.collect()]
+    res = con.execute(sql)
+    ocols = [d[0] for d in res.description]
+    rows = res.fetchall()
+    rec = {"rows_match": False, "schema_match": False, "hash_match": False,
+           "spark_rows": len(got), "oracle_rows": len(rows), "err": None}
+    if sorted(ocols) != cols:
+        rec["err"] = f"columns {ocols} vs {df.columns}"
+        return rec
+    rec["schema_match"] = True
+    if len(got) != len(rows):
+        rec["err"] = f"rows {len(got)} vs {len(rows)}"
+        return rec
+    rec["rows_match"] = True
+    idx = [ocols.index(c) for c in cols]
+    want = [tuple(_round6(row[i]) for i in idx) for row in rows]
+    if not ordered:
+        got, want = sorted(got, key=repr), sorted(want, key=repr)
+    for i, (g, w) in enumerate(zip(got, want)):
+        if not _row_close(g, w):
+            rec["err"] = f"first mismatch at {i}: {g} != {w}"
+            return rec
+    rec["hash_match"] = True
+    return rec
+
+
+def _round6(v):
+    return round(v, 6) if isinstance(v, float) else v
+
+
+def _row_close(a: tuple, b: tuple) -> bool:
+    return all(
+        str(x) == str(y)
+        or (isinstance(x, float) and isinstance(y, float)
+            and math.isclose(x, y, rel_tol=1e-6, abs_tol=1e-6))
+        for x, y in zip(a, b)
+    )
 
 
 # --- engine plumbing ---------------------------------------------------------

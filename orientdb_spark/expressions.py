@@ -216,10 +216,6 @@ class Scope:
 # --- method chain ops (core:sql/filter/OSQLFilterItemAbstract.java:120-249) ---
 
 
-def _is_string(scope: Scope, col: Column) -> bool:
-    return True  # best-effort; size() disambiguation handled via try below
-
-
 def apply_method(scope: Scope, col: Column, m: A.MethodPart) -> Column:
     name = m.name
     args = [compile_expr(scope, a) for a in m.args]

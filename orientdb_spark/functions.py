@@ -16,7 +16,6 @@ so the SELECT compiler routes them through groupBy().agg().
 
 from __future__ import annotations
 
-import math
 from typing import Callable
 
 from pyspark.sql import Column, functions as F
@@ -112,10 +111,6 @@ class FunctionRegistry:
 
     def is_aggregate(self, name: str) -> bool:
         return name.lower() in self._aggregates
-
-    def is_known(self, name: str) -> bool:
-        n = name.lower()
-        return n in self._scalars or n in self._aggregates
 
     def build(self, name: str, args: list[Column], distinct: bool = False) -> Column:
         n = name.lower()

@@ -41,6 +41,3 @@ def unregister_operator(name: str) -> None:
 def custom_operator(name: str) -> OperatorBuilder | None:
     return _CUSTOM.get(name.lower())
 
-
-def custom_operator_names() -> frozenset[str]:
-    return frozenset(_CUSTOM)

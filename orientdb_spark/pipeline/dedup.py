@@ -139,17 +139,6 @@ def _sig_columns(id_df: DataFrame, hash_array: Column, num_hashes: int) -> DataF
     return ex.groupBy("__id").agg(*aggs)
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", num_hashes: int = 16
-) -> DataFrame:
-    hashed = df.select(F.col(id_col).alias("__id"), token_hashes(F.col(text_col)).alias("__h"))
-    sig = _sig_columns(hashed, F.col("__h"), num_hashes)
-    return sig.select(
-        F.col("__id").alias(id_col),
-        F.array(*[F.col(f"__s{i}") for i in range(num_hashes)]).alias("signature"),
-    )
-
-
 def _shingle_stage(df: DataFrame, text_col: str, id_col: str, shingle: int) -> DataFrame:
     """(__id, __toks, __h): distinct word-``shingle``-grams and their
     minhash-ready hashes, one Arrow pass (or pure Column ops for bare
@@ -431,35 +420,6 @@ def minhash_lsh_pairs_incremental(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-
-
-def simhash_col(text: Column, bits: int = 16) -> Column:
-    """SimHash fingerprint over the distinct-token set: bit j is the sign
-    of sum over tokens of (bit_j(h60(token)) * 2 - 1)."""
-    toks = token_set(text)
-    return simhash_from_hashes(F.transform(toks, lambda t: h60(t)), bits)
-
-
-def simhash_from_hashes(hashed: Column, bits: int = 16) -> Column:
-    """SimHash from a pre-hashed token array — use a staged projection for
-    the hash array so the ``bits`` aggregate passes don't each re-hash
-    every token (interpreted HOFs have no subexpression elimination)."""
-
-    def bit_merge(j: int):
-        # two-parameter merge closure (acc, h); j captured via factory —
-        # a third default parameter would confuse pyspark's lambda arity
-        def merge(acc: Column, h: Column) -> Column:
-            return acc + (F.shiftright(h, j) % 2) * 2 - 1
-
-        return merge
-
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        bit_sum = F.aggregate(hashed, F.lit(0).cast("long"), bit_merge(j))
-        out = out + F.when(bit_sum > 0, F.lit(2 ** j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return out
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16) -> DataFrame:

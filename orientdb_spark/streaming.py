@@ -603,17 +603,6 @@ def range_join_stream(
     return l.join(r, cond, "inner").drop(r[on])
 
 
-def stream_to_batches(stream_df: DataFrame, batch_fn, **options):
-    """foreachBatch sink — the push-based listener surface for streams
-    (the reference's per-record listener, batched)."""
-    return (
-        stream_df.writeStream.outputMode(options.pop("outputMode", "update"))
-        .foreachBatch(batch_fn)
-        .options(**options)
-        .start()
-    )
-
-
 def gap_fill_stream(
     df: DataFrame,
     on: tuple[str, ...] = ("user_id",),

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from orientdb_spark import register_operator, unregister_operator
+from orientdb_spark import Engine, register_operator, unregister_operator
 from orientdb_spark.errors import OCommandSQLParsingException
 
 
@@ -59,3 +59,13 @@ def test_custom_operator_overrides_builtin(engine):
         engine._plan_cache.clear()
     rows = engine.query("select r_name from region where r_name matches 'zzz' ")
     assert rows == []
+
+
+def test_reregistered_function_replaces_the_cached_plan(spark):
+    eng = Engine(spark)
+    eng.register_dataframe("t", spark.range(3).withColumnRenamed("id", "x"))
+    text = "select myfn(x) as y from t order by y"
+    eng.register_function("myfn", lambda a: a[0] + 1)
+    assert [r.y for r in eng.query(text)] == [1, 2, 3]
+    eng.register_function("myfn", lambda a: a[0] * 100)
+    assert [r.y for r in eng.query(text)] == [0, 100, 200]

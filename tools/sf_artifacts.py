@@ -1,199 +1,77 @@
-"""Commit-able above-driver-scale evidence (r7 verdict item: make the
-sf1 claims re-runnable from JSON, not prose).
+"""Above-driver-scale bench evidence: two standalone bench.py runs over a
+generated SF dir, merged per query into ``BENCH_<suffix>.json``.
 
     python tools/gen_sf.py 1.0 /tmp/sf1          # inputs (deterministic)
-    python tools/sf_artifacts.py /tmp/sf1 sf1    # -> CORRECTNESS_sf1.json
-                                                 #    + BENCH_sf1.json
+    python tools/sf_artifacts.py /tmp/sf1 sf1    # -> BENCH_sf1.json
 
-CORRECTNESS_sf1.json mirrors the driver's shape (per-entry rows_match /
-schema_match / hash_match / spark_rows / oracle_rows / err) over the
-entries tagged ``sf_scale``: every subsystem, each with a DuckDB oracle
-that stays tractable at sf1 (linear, or bounded by fixed query panels and
-bucket caps). Excluded by that rule: sequential-replay oracles like
-CUSUM/Kruskal and the sparse-exactness HyperBall fixture (sf<=0.01
-constructions), quadratic pair scans (sim_bitext_mine; dedup_semantic's
-within-cell scan over a fixed 16 cells) and sim_index_persist (a multi-GB
-index write per run; its file pruning is plan-pinned in
-tests/test_ivf_index.py). Time a new oracle at sf1 before tagging it.
-BENCH_sf1.json is bench.py's own output plus a
-provenance block naming the generator and its scale factor.
+The correctness half (``CORRECTNESS_sf1.json``) is
+``python tools/check_entries.py /tmp/sf1 --tag sf_scale --record sf1``.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
-import math
 import os
 import subprocess
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
 
 
-def _norm(v):
-    if isinstance(v, float):
-        return round(v, 6)
-    return v
+def merge_runs(runs: list[dict]) -> dict:
+    """BENCH.md's noise convention: per-query MIN across the runs' full
+    ``--out`` records, their sample counts and sampling seconds summed,
+    and each run's own total kept so a later delta can be judged against
+    the run-to-run spread instead of a single sample."""
+    first = runs[0]
+    queries = {q: min(r["queries"][q] for r in runs if q in r["queries"]) for q in first["queries"]}
 
+    def total(key):
+        return {q: sum(r[key].get(q, 0) for r in runs) for q in first[key]}
 
-def compare_entry(spark, con, queries, oracles, name, sf_dir):
-    rec = {
-        "rows_match": False,
-        "schema_match": False,
-        "hash_match": False,
-        "spark_rows": None,
-        "oracle_rows": None,
-        "err": None,
+    return {
+        **first,
+        "queries": queries,
+        "value": round(sum(queries.values()), 3),
+        "samples": total("samples"),
+        "spent_wall": total("spent_wall"),
+        "run_totals": [r["value"] for r in runs],
+        "convention": f"per-query min of {len(runs)} standalone runs (BENCH.md r10)",
     }
-    try:
-        df = queries[name](spark, sf_dir)
-        cols = sorted(df.columns)
-        srows = sorted(
-            (tuple(_norm(r[c]) for c in cols) for r in df.collect()), key=repr
-        )
-        res = con.execute(oracles[name])
-        ocols = [d[0] for d in res.description]
-        idx = [ocols.index(c) for c in cols] if sorted(ocols) == cols else None
-        orows = (
-            sorted(
-                (tuple(_norm(row[i]) for i in idx) for row in res.fetchall()),
-                key=repr,
-            )
-            if idx is not None
-            else []
-        )
-        rec["spark_rows"], rec["oracle_rows"] = len(srows), len(orows)
-        rec["schema_match"] = idx is not None
-        rec["rows_match"] = rec["schema_match"] and len(srows) == len(orows)
-
-        def h(rows):
-            m = hashlib.md5()
-            for r in rows:
-                m.update(repr(r).encode())
-            return m.hexdigest()
-
-        def close(a, b):
-            return len(a) == len(b) and all(
-                math.isclose(x, y, rel_tol=1e-6, abs_tol=1e-6)
-                if isinstance(x, float) and isinstance(y, float)
-                else str(x) == str(y)
-                for x, y in zip(a, b)
-            )
-
-        rec["hash_match"] = rec["rows_match"] and (
-            h(srows) == h(orows) or all(close(s, o) for s, o in zip(srows, orows))
-        )
-    except Exception as e:  # noqa: BLE001 — record-and-continue sweep
-        rec["err"] = f"{type(e).__name__}: {e}"[:300]
-    return rec
 
 
 def main():
-    import duckdb
-
-    import __spark_entry__ as entrymod
-    from orientdb_spark import get_spark
-    from orientdb_spark.entries import tagged
-
-    # --sweep-only (r11 verdict item 1): regenerate the correctness
-    # sweep WITHOUT the two standalone bench runs — the per-SF bench
-    # grew multi-hour with the 35-query headline, which is exactly how
-    # sf5/sf10 artifacts fell behind the entry list. The bench can be
-    # (re)recorded separately; the sweep is the scale-correctness
-    # evidence and must stay cheap to regenerate.
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sweep_only = "--sweep-only" in sys.argv
+    args = sys.argv[1:]
     sf_dir = args[0] if args else "/tmp/sf1"
     suffix = args[1] if len(args) > 1 else "sf1"
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    entries = tagged("sf_scale")
-
-    spark = get_spark(app_name="sf_artifacts")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    out = {}
-    for name in entries:
-        out[name] = compare_entry(spark, con, queries, oracles, name, sf_dir)
-        status = "OK" if out[name]["hash_match"] else f"FAIL {out[name]['err']}"
-        print(f"{name}: {status} ({out[name]['spark_rows']} rows)", flush=True)
-    ok = sum(1 for r in out.values() if r["hash_match"])
-    # record vintage (r12 advice): name the exact tree the sweep ran on
-    # so a later patch_sf_entries.py touch-up is distinguishable from a
-    # uniform full sweep
+    # fresh JVM per run: an in-process session is warm in ways a
+    # standalone run is not; each run writes its full record (with
+    # `samples`) to its own --out file, never the committed BENCH_run.json
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
+    runs = []
+    with tempfile.TemporaryDirectory() as tmp:
+        for i in range(2):
+            out = os.path.join(tmp, f"run{i}.json")
+            subprocess.run(
+                [sys.executable, os.path.join(ROOT, "bench.py"), "--out", out],
+                env=env, check=True, cwd=ROOT, stdout=subprocess.DEVNULL,
+            )
+            with open(out) as f:
+                runs.append(json.load(f))
     commit = subprocess.run(
         ["git", "-C", ROOT, "rev-parse", "--short", "HEAD"],
         capture_output=True, text=True,
     ).stdout.strip() or "unknown"
-    corr = {
-        "__provenance__": {
-            "sf_dir": sf_dir,
-            "generator": "tools/gen_sf.py (deterministic seeds 4201-4209)",
-            "entries": len(entries),
-            "hash_green": ok,
-            "mode": "sweep-only" if sweep_only else "sweep+bench",
-            "commit": commit,
-        },
-        **out,
+    bench = merge_runs(runs)
+    bench["provenance"] = {
+        "sf_dir": sf_dir,
+        "generator": "tools/gen_sf.py (deterministic seeds 4201-4209)",
+        "commit": commit,
     }
-    with open(os.path.join(ROOT, f"CORRECTNESS_{suffix}.json"), "w") as f:
-        json.dump(corr, f, indent=2)
-    print(f"correctness: {ok}/{len(entries)} -> CORRECTNESS_{suffix}.json")
-    spark.stop()
-
-    if sweep_only:
-        print("--sweep-only: skipping the standalone bench runs "
-              f"(BENCH_{suffix}.json untouched)")
-        return
-
-    # BENCH.md's two-filter noise convention (r10 verdict item 3),
-    # applied where the scale argument is made: TWO standalone bench
-    # subprocesses (fresh JVM each — the in-script session above is
-    # warm in ways a standalone run is not), per-query MIN across runs,
-    # both run totals recorded so a future delta can be adjudicated
-    # against the run-to-run spread instead of a single sample.
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
-    runs = []
-    for _ in range(2):
-        bench_out = subprocess.run(
-            [sys.executable, os.path.join(ROOT, "bench.py")],
-            env=env,
-            capture_output=True,
-            text=True,
-            check=True,
-            cwd=ROOT,
-        ).stdout.strip().splitlines()[-1]
-        runs.append(json.loads(bench_out))
-    # snapshot the real per-run totals BEFORE any merging: runs[0] is
-    # mutated below (bench aliases it), and the r11 first-use of this
-    # convention recorded run_totals[0] = the min-merged total because
-    # of exactly that aliasing — the spread the convention exists to
-    # record was lost (BENCH.md erratum)
-    run_totals = [r["value"] for r in runs]
-    bench = runs[0]
-    bench["queries"] = {
-        q: min(r["queries"][q] for r in runs if q in r["queries"])
-        for q in bench["queries"]
-    }
-    bench["value"] = round(sum(bench["queries"].values()), 3)
-    bench["samples"] = {
-        q: sum(r["samples"].get(q, 0) for r in runs) for q in bench["samples"]
-    }
-    bench["run_totals"] = run_totals
-    bench["convention"] = "per-query min of 2 standalone runs (BENCH.md r10)"
-    bench["provenance"] = corr["__provenance__"] | {"bench_sf_dir": sf_dir}
     with open(os.path.join(ROOT, f"BENCH_{suffix}.json"), "w") as f:
         json.dump(bench, f, indent=2)
-    print(f"bench total {bench.get('value')} s (runs: {bench['run_totals']}) "
-          f"-> BENCH_{suffix}.json")
+    print(f"bench total {bench['value']} s (runs: {bench['run_totals']}) -> BENCH_{suffix}.json")
 
 
 if __name__ == "__main__":
